@@ -881,20 +881,21 @@ def main() -> None:
         pass
 
 
-_BOUNDED_MAX = 25  # changed-query entries on the bounded driver line
+_BOUNDED_MAX = 25  # query entries on the bounded driver line
 
 
 def _bounded_line(
     times: dict[str, float], summary: dict, root: str | None = None
 ) -> dict:
     """The bounded final-stdout record: every summary field plus a
-    ``queries`` map holding (a) queries absent from the committed prior
-    record (first bench contact — always included) and (b) up to
-    ``_BOUNDED_MAX`` queries whose time moved >10% vs that prior,
-    largest |log ratio| first. Prior = BENCH_FULL.json when its sf
-    matches; with no usable prior, the slowest ``_BOUNDED_MAX`` queries
-    stand in so the driver still sees real numbers. Values are rounded
-    to 2 decimals to keep the line short."""
+    ``queries`` map of at most ``_BOUNDED_MAX`` entries — first (a)
+    queries absent from the committed prior record (first bench
+    contact), then (b) queries whose time moved >10% vs that prior,
+    largest |log ratio| first. Candidates past the cap are dropped and
+    counted in the ``queries_bounded`` marker. Prior = BENCH_FULL.json
+    when its sf matches; with no usable prior, the slowest
+    ``_BOUNDED_MAX`` queries stand in so the driver still sees real
+    numbers. Values are rounded to 2 decimals to keep the line short."""
     here = root or os.path.dirname(os.path.abspath(__file__))
     prior: dict[str, float] = {}
     try:
@@ -918,15 +919,15 @@ def _bounded_line(
             ),
             key=lambda n: -abs(math.log(max(times[n], 1e-3) / prior[n])),
         )
-        kept = new + changed[: max(0, _BOUNDED_MAX - len(new))]
+        candidates = new + changed
     else:
-        kept = sorted(times, key=times.__getitem__, reverse=True)[
-            :_BOUNDED_MAX
-        ]
+        candidates = sorted(times, key=times.__getitem__, reverse=True)
+    kept = candidates[:_BOUNDED_MAX]
     out = dict(summary)
     out["queries"] = {n: round(times[n], 2) for n in kept}
     out["queries_bounded"] = (
-        f"changed >10% vs prior + first-contact; all {len(times)} in "
+        f"changed >10% vs prior + first-contact, capped at {_BOUNDED_MAX} "
+        f"({len(candidates) - len(kept)} over the cap); all {len(times)} in "
         "BENCH_FULL.json"
     )
     return out

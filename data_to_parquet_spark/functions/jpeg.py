@@ -562,10 +562,22 @@ def _extend(bits: int, s: int) -> int:
 
 #: (BITS bytes, HUFFVAL bytes) -> 65536-entry flat-prefix decode table
 #: ((length << 8) | symbol per 16-bit window, 0 = no code). Keyed by the
-#: table definition itself so own-encoder files share one cached build;
-#: foreign tables add at most a few hundred KB per distinct definition
-#: for the worker's lifetime.
+#: table definition itself so own-encoder files share one cached build.
+#: The four own-encoder tables are always stored; a foreign definition
+#: (~0.5 MB as a list) is stored only while fewer than
+#: ``_HUFF_LUT_CACHE_MAX`` entries exist and is rebuilt per call after
+#: that, so a stream of distinct foreign tables cannot grow the cache.
 _HUFF_LUT_CACHE: dict = {}
+_HUFF_LUT_CACHE_MAX = 16
+_OWN_HUFF_KEYS = frozenset(
+    (bytes(b), bytes(v))
+    for b, v in (
+        (_DC_LUMA_BITS, _DC_LUMA_VALS),
+        (_AC_LUMA_BITS, _AC_LUMA_VALS),
+        (_DC_CHROMA_BITS, _DC_CHROMA_VALS),
+        (_AC_CHROMA_BITS, _AC_CHROMA_VALS),
+    )
+)
 
 
 def _huff_lut(bits, vals) -> list:
@@ -588,7 +600,8 @@ def _huff_lut(bits, vals) -> list:
                 k += 1
             code <<= 1
         lut = arr.tolist()
-        _HUFF_LUT_CACHE[key] = lut
+        if key in _OWN_HUFF_KEYS or len(_HUFF_LUT_CACHE) < _HUFF_LUT_CACHE_MAX:
+            _HUFF_LUT_CACHE[key] = lut
     return lut
 
 

@@ -2,9 +2,8 @@
 PySpark 4 Python DataSource (V2 API).
 
 This is the idiomatic Spark face of the reference's converter pipeline
-(``src/lib.rs:30-65``): the same stdlib streaming readers and header/
-stringify kernels as :func:`..sources.excel.read_excel`, but registered as a
-named format so Excel participates in the normal reader surface::
+(``src/lib.rs:30-65``), registered as a named format so Excel participates
+in the normal reader surface::
 
     spark.dataSource.register(ExcelDataSource)
     df = (spark.read.format("excel")
@@ -12,27 +11,29 @@ named format so Excel participates in the normal reader surface::
           .option("skip_rows", "1")
           .load("/data/books/*.xlsx"))
 
-Execution model: ``partitions()`` returns one :class:`InputPartition` per
-workbook (the same one-task-per-file parallelism the mapInPandas path uses —
-replacing the reference's 8 hard-coded threads, ``src/lib.rs:169,237``), and
-``read()`` yields Arrow RecordBatches straight from the streaming scan, so
-rows never materialize driver-side and per-task memory stays bounded by one
+It shares its planner and reader with :func:`..sources.excel.read_excel`:
+``schema()`` runs :func:`..sources.excel.plan_scan` over the first workbook,
+``partitions()`` returns one :class:`InputPartition` per workbook (one task
+per file — replacing the reference's 8 hard-coded threads,
+``src/lib.rs:169,237``), and ``read()`` is :func:`..sources.excel.read_file`,
+which yields Arrow RecordBatches straight from the streaming scan, so rows
+never materialize driver-side and per-task memory stays bounded by one
 batch.
 
 Differences from :func:`read_excel` (documented deviations):
 
 * duplicate output column names (the reference's ``a, a_2, a`` collision,
-  ``src/lib.rs:455-463``) are uniquified with ``__dupN`` suffixes — a named
-  format cannot rename columns after the fact the way the mapInPandas path's
-  ``toDF`` restore does;
-* the single-large-file XML-split fast path is not applied (a DataSource
-  partition maps to a whole file); use ``read_excel`` to parallelize inside
-  one giant workbook.
+  ``src/lib.rs:455-463``) keep their ``__dupN`` suffixes — a named format
+  cannot rename columns after the fact the way ``read_excel``'s ``toDF``
+  restore does;
+* the single-large-file XML-split path is not applied: a DataSource
+  partition maps to a whole file, and planning runs in a separate Python
+  worker that cannot own the split's scratch file. Use ``read_excel`` to
+  parallelize inside one giant workbook.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import types as T
@@ -44,41 +45,21 @@ from pyspark.sql.datasource import (
 )
 
 from ..errors import DataToParquetError
-from .excel import DEFAULT_BATCH_SIZE, open_workbook, scan_sheet
+from .excel import (
+    DEFAULT_BATCH_SIZE,
+    expand_paths,
+    plan_scan,
+    read_file,
+    string_schema,
+    unique_names,
+)
 
 __all__ = ["ExcelDataSource", "register"]
-
-
-def _expand(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            glob.glob(os.path.join(path, "*.xlsx"))
-            + glob.glob(os.path.join(path, "*.xlsb"))
-        )
-    elif any(ch in path for ch in "*?["):
-        found = sorted(glob.glob(path))
-    else:
-        found = [path]
-    if not found:
-        raise DataToParquetError(f"no Excel files match {path!r}")
-    return found
 
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str) -> None:
         self.path = path
-
-
-def _uniquify(headers: list[str]) -> list[str]:
-    """Residual-collision guard over build_headers output (``a, a_2, a``
-    still collides after the reference's ``_n`` suffixing)."""
-    seen: dict[str, int] = {}
-    unique = []
-    for h in headers:
-        k = seen.get(h, 0)
-        seen[h] = k + 1
-        unique.append(h if k == 0 else f"{h}__dup{k}")
-    return unique
 
 
 class ExcelDataSource(DataSource):
@@ -102,21 +83,15 @@ class ExcelDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise DataToParquetError("format('excel') requires .load(path)")
-        return _expand(path)
+        found = expand_paths(path)
+        if not found:
+            raise DataToParquetError(f"no Excel files match {path!r}")
+        return found
 
     def schema(self) -> T.StructType:
-        sheet_name, sheet_index, skip_rows, _ = self._opts()
-        with open_workbook(self._files()[0]) as wb:
-            sheet = wb.resolve_sheet(sheet_name, sheet_index)
-            headers, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
-        if not headers:
-            raise DataToParquetError("no header row found")
-        return T.StructType(
-            [
-                T.StructField(u, T.StringType(), True)
-                for u in _uniquify(headers)
-            ]
-        )
+        # the first workbook only; the others are checked as they are read
+        scan = plan_scan(self._files()[:1], *self._opts()[:3])
+        return string_schema(unique_names(scan.names))
 
     def reader(self, schema: T.StructType) -> "ExcelReader":
         return ExcelReader(self._files(), schema, *self._opts())
@@ -129,40 +104,15 @@ class ExcelDataSource(DataSource):
 
 
 class ExcelReader(DataSourceReader):
-    def __init__(self, files, schema, sheet_name, sheet_index, skip_rows, batch_size):
+    def __init__(self, files, schema, *opts):
         self.files = files
-        self.field_names = schema.fieldNames()
-        self.sheet_name = sheet_name
-        self.sheet_index = sheet_index
-        self.skip_rows = skip_rows
-        self.batch_size = batch_size
+        self.scan_args = (schema.fieldNames(), *opts)
 
     def partitions(self) -> list[InputPartition]:
         return [_FilePartition(p) for p in self.files]
 
     def read(self, partition: _FilePartition):
-        import pyarrow as pa
-
-        with open_workbook(partition.path) as wb:
-            sheet = wb.resolve_sheet(self.sheet_name, self.sheet_index)
-            headers, batches = scan_sheet(
-                wb, sheet, self.skip_rows, self.batch_size
-            )
-            if _uniquify(headers) != self.field_names:
-                raise DataToParquetError(
-                    f"{partition.path!r}: header row {headers!r} does not "
-                    f"match the schema inferred from the first file "
-                    f"({self.field_names!r}) — same-position columns would "
-                    f"be silently remapped"
-                )
-            for batch in batches:
-                # columns are positional (reference O9 densify semantics);
-                # one Arrow array per schema column, nulls for absent cells
-                arrays = [
-                    pa.array([row[i] for row in batch], type=pa.string())
-                    for i in range(len(self.field_names))
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, self.field_names)
+        return read_file(partition.path, *self.scan_args)
 
 
 class ExcelStreamReader(DataSourceStreamReader):
@@ -187,21 +137,13 @@ class ExcelStreamReader(DataSourceStreamReader):
     exist (or pass an explicit schema).
     """
 
-    def __init__(self, path, schema, sheet_name, sheet_index, skip_rows, batch_size):
+    def __init__(self, path, schema, *opts):
         self.path = path
-        self.field_names = schema.fieldNames()
-        self.sheet_name = sheet_name
-        self.sheet_index = sheet_index
-        self.skip_rows = skip_rows
-        self.batch_size = batch_size
+        self.scan_args = (schema.fieldNames(), *opts)
 
     def _listing(self) -> dict[str, int]:
-        try:
-            files = _expand(self.path)
-        except DataToParquetError:
-            return {}
         out: dict[str, int] = {}
-        for p in files:
+        for p in expand_paths(self.path):
             try:
                 out[p] = os.stat(p).st_mtime_ns
             except OSError:
@@ -226,17 +168,7 @@ class ExcelStreamReader(DataSourceStreamReader):
         return [_FilePartition(p) for p in new]
 
     def read(self, partition: _FilePartition):
-        reader = ExcelReader(
-            [partition.path],
-            T.StructType(
-                [T.StructField(n, T.StringType(), True) for n in self.field_names]
-            ),
-            self.sheet_name,
-            self.sheet_index,
-            self.skip_rows,
-            self.batch_size,
-        )
-        yield from reader.read(partition)
+        return read_file(partition.path, *self.scan_args)
 
     def commit(self, end: dict) -> None:
         pass  # the checkpoint log is the ledger; nothing engine-side to GC

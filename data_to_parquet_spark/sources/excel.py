@@ -1,38 +1,44 @@
 """Excel → DataFrame source: the engine's replacement for the reference's
 fixed pipeline (``src/lib.rs:30-65``), re-expressed Spark-first.
 
-Design (SURVEY.md §3.3 "Spark lifecycle"):
+Both Spark surfaces — :func:`read_excel` (and :func:`read_excel_all_sheets`
+on top of it) and ``spark.read.format("excel")`` (:mod:`.datasource`) — are
+built from the same two halves defined here:
 
-* a file-list DataFrame (one row per input file) is repartitioned so each file
-  becomes one Spark task — parallelism across files/executors replaces the
-  reference's 8 hard-coded worker threads (``src/lib.rs:169,237``);
-* inside each task, ``mapInPandas`` runs the stdlib streaming reader
-  (:mod:`.xlsx` / :mod:`.xlsb`) and yields pandas chunks of ``batch_size``
-  rows — Arrow carries them to the JVM as columnar batches, replacing the
-  reference's hand-rolled RecordBatch pivot (``src/lib.rs:403-439``);
-* the output schema is inferred on the driver from the FIRST file's header row
-  using the exact reference naming rules (``build_headers``), and is all
-  nullable strings (``src/lib.rs:229-234``).
+* driver side, :func:`expand_paths` and :func:`plan_scan` make every
+  planning decision: the file list, the readability check, sheet
+  resolution, the header-row schema (exact reference naming rules,
+  ``build_headers``; all nullable strings, ``src/lib.rs:229-234``) and, for
+  one large ``.xlsx``, the XML split and its offsets;
+* executor side, :func:`read_file` (one task per workbook — parallelism
+  across files/executors replaces the reference's 8 hard-coded worker
+  threads, ``src/lib.rs:169,237``) and the split's per-fragment reader run
+  the stdlib streaming decoders (:mod:`.xlsx` / :mod:`.xlsb`) through one
+  densify-and-batch helper and yield ``pyarrow.RecordBatch`` es of
+  ``batch_size`` rows straight to the JVM, replacing the reference's
+  hand-rolled RecordBatch pivot (``src/lib.rs:403-439``).
 
-Scale posture: at 100 TB (= millions of workbooks) the file list itself is a
-DataFrame, schema inference touches only one file, and each task's memory is
-bounded by one row + the shared-string table of its own file. No driver-side
-materialization of data ever happens.
+Scale posture: at 100 TB (= millions of workbooks) the file list itself is
+a DataFrame, planning opens the first workbook once (its sheet map, shared
+strings and at most one inflate of the selected sheet part), and each
+task's memory is bounded by one batch + the shared-string table of its own
+file. No driver-side materialization of data ever happens.
 """
 
 from __future__ import annotations
 
 import glob
+import itertools
 import os
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..errors import DataToParquetError
 from ..kernels import build_headers
-from .xlsx import XlsxWorkbook, _fast_path_eligible, walk_rows, walk_rows_fast
+from .xlsx import _FAST_BUFFER_LIMIT, XlsxWorkbook, _fast_path_eligible, decode_rows
 
 __all__ = [
     "read_excel",
@@ -62,28 +68,118 @@ def open_workbook(path: str):
     )
 
 
-def _batch_to_pdf(batch: list[list[str | None]], cols: list[str]) -> pd.DataFrame:
-    """Row-major batch -> pandas via C-level transpose. Positional columns
-    (set_axis, not a dict) so duplicate header names — which the reference's
-    naming rules can legitimately produce, e.g. ``a, a_2, a`` -> ``a, a_2,
-    a_2`` — survive instead of collapsing."""
-    n_cols = len(cols)
-    columns = list(zip(*batch)) if batch else [[] for _ in range(n_cols)]
-    pdf = pd.DataFrame(
-        {i: pd.Series(c, dtype=object) for i, c in enumerate(columns)}
+def expand_paths(paths: str | list[str]) -> list[str]:
+    """Expand globs and directories (a directory means every workbook in
+    it); plain paths pass through unchecked."""
+    out: list[str] = []
+    for p in [paths] if isinstance(paths, str) else paths:
+        if os.path.isdir(p):
+            out += sorted(
+                glob.glob(os.path.join(p, "*.xlsx"))
+                + glob.glob(os.path.join(p, "*.xlsb"))
+            )
+        elif any(ch in p for ch in "*?["):
+            out += sorted(glob.glob(p))
+        else:
+            out.append(p)
+    return out
+
+
+def unique_names(headers: list[str]) -> list[str]:
+    """``__dupN``-suffix the residual collisions of the reference naming
+    rules (``a, a_2, a`` -> ``a, a_2, a_2``), which Spark plans reject."""
+    seen: dict[str, int] = {}
+    out = []
+    for h in headers:
+        k = seen.get(h, 0)
+        seen[h] = k + 1
+        out.append(h if k == 0 else f"{h}__dup{k}")
+    return out
+
+
+def string_schema(names: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
+class _Header(NamedTuple):
+    names: list[str]  # [] for an empty sheet
+    start_col: int | None
+    num_cols: int | None
+    row_idx: int | None
+    rows: Iterator  # the data rows after the header
+
+
+def _read_header(rows, dims, skip_rows: int) -> _Header:
+    """Consume ``rows`` through the header row.
+
+    Geometry comes from the declared dimension box ``dims``
+    (``src/lib.rs:160-162``) when present, else from the header row's own
+    extent. Rows before ``header_row_idx = start_row + skip_rows`` are
+    discarded (``src/lib.rs:162,206-223``); the header row goes through
+    ``build_headers`` (``src/lib.rs:441-465``)."""
+    start_col = num_cols = row_idx = None
+    if dims is not None:
+        (r0, c0), (_, c1) = dims
+        start_col, num_cols, row_idx = c0, c1 - c0 + 1, r0 + skip_rows
+    header_cells: dict[int, str] = {}
+    pending = None
+    for row, cells in rows:
+        if row_idx is None:
+            row_idx = row + skip_rows
+        if row < row_idx:
+            continue  # leading-row discard (O5)
+        if row == row_idx:
+            header_cells = dict(cells)
+            continue
+        pending = (row, cells)
+        break
+    if row_idx is None or (start_col is None and not header_cells):
+        # empty sheet, or neither a dimension box nor header cells
+        return _Header([], None, None, None, iter(()))
+    if start_col is None:
+        # no dimension element: infer span from the header row extent
+        start_col = min(header_cells)
+        num_cols = max(header_cells) - start_col + 1
+    if pending is not None:
+        rows = itertools.chain([pending], rows)
+    return _Header(
+        build_headers(header_cells, num_cols, start_col),
+        start_col,
+        num_cols,
+        row_idx,
+        rows,
     )
-    return pdf.set_axis(cols, axis=1)
 
 
-def _sheet_geometry(wb, sheet: str, skip_rows: int):
-    """(start_col, num_cols, header_row_idx) from the declared dimension box
-    (``src/lib.rs:160-162``); None fields if the sheet lacks a dimension
-    element (then geometry is inferred from the header row itself)."""
-    dims = wb.dimensions(sheet)
-    if dims is None:
-        return None, None, None
-    (r0, c0), (_, c1) = dims
-    return c0, c1 - c0 + 1, r0 + skip_rows
+def _dense_batches(
+    rows, start_col: int, num_cols: int, batch_size: int
+) -> Iterator[list[list[str | None]]]:
+    """Densify sparse rows over the header's column span — absent cell →
+    None (NULL), present-but-empty cell → ``""`` (``src/lib.rs:398`` vs
+    ``:428-433``), cells beyond the span dropped (``src/lib.rs:424-425``)
+    — in batches of ``batch_size`` rows (``src/main.rs:31-32``)."""
+    end_col = start_col + num_cols
+    buf: list[list[str | None]] = []
+    for _, cells in rows:
+        dense: list[str | None] = [None] * num_cols
+        for col, s in cells:
+            if start_col <= col < end_col:  # width truncation (O9)
+                dense[col - start_col] = s
+        buf.append(dense)
+        if len(buf) >= batch_size:
+            yield buf
+            buf = []
+    if buf:
+        yield buf
+
+
+def _record_batches(batches, names: list[str]) -> Iterator[pa.RecordBatch]:
+    """Row-major batches → Arrow via the C-level ``zip(*batch)``
+    transpose; columns are positional, so ``names`` must be unique."""
+    for batch in batches:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(col, type=pa.string()) for col in zip(*batch)], names
+        )
 
 
 def scan_sheet(
@@ -92,76 +188,148 @@ def scan_sheet(
     skip_rows: int = 0,
     batch_size: int = DEFAULT_BATCH_SIZE,
 ) -> tuple[list[str], Iterator[list[list[str | None]]]]:
-    """Stream one sheet: returns (headers, iterator of row-batches).
-
-    Reproduces the reference's scan semantics end to end:
-
-    * rows before ``header_row_idx = start_row + skip_rows`` are discarded
-      (``src/lib.rs:162,206-223``);
-    * the header row is stringified and run through ``build_headers``
-      (``src/lib.rs:441-465``);
-    * data rows densify sparsely-present cells over the header's column span:
-      absent cell → None (NULL), present-but-empty cell → ``""``
-      (``src/lib.rs:398`` vs ``:428-433``);
-    * cells beyond the header width are dropped (``src/lib.rs:424-425``);
-    * batches carry ``batch_size`` rows (``src/main.rs:31-32``).
-    """
-    start_col, num_cols, header_row_idx = _sheet_geometry(wb, sheet, skip_rows)
-
-    rows = wb.iter_rows_str(sheet)
-
-    # --- header phase -----------------------------------------------------
-    header_cells: dict[int, str] = {}
-    first_row: int | None = None
-    pending_row: tuple[int, list[tuple[int, str]]] | None = None
-    for row, cells in rows:
-        if first_row is None:
-            first_row = row
-            if header_row_idx is None:
-                header_row_idx = first_row + skip_rows
-        if row < header_row_idx:
-            continue  # leading-row discard (O5)
-        if row == header_row_idx:
-            header_cells = dict(cells)
-            continue
-        pending_row = (row, cells)
-        break
-
-    if header_row_idx is None:  # empty sheet
+    """Stream one sheet: returns (headers, iterator of row-batches), with
+    the reference's scan semantics end to end (leading-row skip, header
+    naming, densify, width truncation, batch size — see
+    :func:`_read_header` and :func:`_dense_batches`)."""
+    h = _read_header(wb.iter_rows_str(sheet), wb.dimensions(sheet), skip_rows)
+    if not h.names:
         return [], iter(())
+    return h.names, _dense_batches(h.rows, h.start_col, h.num_cols, batch_size)
 
-    if start_col is None:
-        # no dimension element: infer span from the header row extent
-        if not header_cells:
-            return [], iter(())
-        start_col = min(header_cells)
-        num_cols = max(header_cells) - start_col + 1
 
-    headers = build_headers(header_cells, num_cols, start_col)
+def read_file(
+    path: str,
+    expected: list[str],
+    sheet_name: str | None,
+    sheet_index: int | None,
+    skip_rows: int,
+    batch_size: int,
+) -> Iterator[pa.RecordBatch]:
+    """Executor side, one workbook: Arrow batches with the
+    :func:`unique_names` of ``expected``. Raises when the file's header
+    row does not match — same-position columns would otherwise be
+    silently remapped."""
+    names = unique_names(expected)
+    with open_workbook(path) as wb:
+        sheet = wb.resolve_sheet(sheet_name, sheet_index)
+        headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size)
+        if unique_names(headers) != names:
+            raise DataToParquetError(
+                f"{path!r}: header row {headers} does not match the schema "
+                f"inferred from the first file {list(expected)}"
+            )
+        yield from _record_batches(batches, names)
 
-    def batches() -> Iterator[list[list[str | None]]]:
-        import itertools
 
-        end_col = start_col + num_cols
-        buf: list[list[str | None]] = []
-        src = (
-            itertools.chain([pending_row], rows)
-            if pending_row is not None
-            else rows
-        )
-        for _, cells in src:
-            dense: list[str | None] = [None] * num_cols
-            for col, s in cells:
-                if start_col <= col < end_col:  # width truncation (O9)
-                    dense[col - start_col] = s
-            buf.append(dense)
-            if len(buf) >= batch_size:
-                yield buf
-                buf = []
-        if buf:
-            yield buf
+class SheetSplit(NamedTuple):
+    """A single sheet part cut at ``<row`` boundaries into byte ranges."""
 
-    return headers, batches()
+    offsets: list[int]  # range i = [offsets[i], offsets[i + 1])
+    start_col: int
+    num_cols: int
+    header_row_idx: int
+    fast: bool  # fast-path eligibility, proved over the whole part
+
+
+class ExcelScan(NamedTuple):
+    names: list[str]  # output column names (may repeat)
+    split: SheetSplit | None
+    sheet_xml: bytes | None  # the inflated part, set with ``split``
+
+
+def plan_scan(
+    paths: list[str],
+    sheet_name: str | None = None,
+    sheet_index: int | None = None,
+    skip_rows: int = 0,
+    *,
+    expected: list[str] | None = None,
+    max_splits: int = 0,
+) -> ExcelScan:
+    """Driver-side planning for one scan of (already expanded) ``paths``.
+
+    Opens ``paths[0]`` once — its readability check, sheet resolution and
+    header scan — and checks that every other path opens too. Output
+    names are ``expected`` (a caller schema) or the first file's header
+    row.
+
+    With ``max_splits`` > 0, one ``.xlsx`` whose sheet part is at least
+    ``SPLIT_THRESHOLD_BYTES`` and declares a dimension box is planned as
+    a split: the part is inflated once, and that buffer feeds the header
+    scan, the explicit-``r`` check, the fast-path eligibility scan and the
+    split offsets. Split fragments never see the header row, so a caller
+    schema is validated against it here.
+    """
+    data = headers = None
+    with open_workbook(paths[0]) as wb:
+        for p in paths[1:]:
+            open_workbook(p).close()
+        sheet = wb.resolve_sheet(sheet_name, sheet_index)
+        member = wb.sheet_member(sheet)
+        if (
+            max_splits
+            and len(paths) == 1
+            and isinstance(wb, XlsxWorkbook)
+            and wb._zip.getinfo(member).file_size >= SPLIT_THRESHOLD_BYTES
+        ):
+            dims = wb.dimensions(sheet)
+            # without a dimension box geometry must be inferred from the
+            # cell stream; only the streaming path implements that
+            if dims is not None:
+                data = wb._zip.read(member)
+        if data is not None:
+            fast = _fast_path_eligible(data)
+            # past iter_rows_str's buffer cap the header scan streams too
+            rows = decode_rows(
+                data,
+                wb._shared_strings(),
+                fast=fast and len(data) <= _FAST_BUFFER_LIMIT,
+            )
+            header = _read_header(rows, dims, skip_rows)
+            headers = header.names
+        elif expected is None:
+            headers, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
+    if expected is None:
+        if not headers:
+            raise DataToParquetError(f"no header row found in {paths[0]!r}")
+        names = headers
+    else:
+        names = list(expected)
+        if headers is not None and headers != names:
+            raise DataToParquetError(
+                f"{paths[0]!r}: header row {headers} does not match the "
+                f"provided schema {names}"
+            )
+    if data is None:
+        return ExcelScan(names, None, None)
+
+    # fragments re-number r-less rows from 0, which would corrupt the
+    # header-relative indexing — require explicit r attributes throughout
+    # (every mainstream writer emits them; stream otherwise)
+    start = data.find(b"<sheetData")
+    end = data.rfind(b"</sheetData>")
+    body_start = data.find(b"<row", start)
+    if (
+        data.count(b"<row ") != data.count(b"<row r=")
+        or start < 0
+        or end < 0
+        or body_start < 0
+        or body_start > end
+    ):
+        return ExcelScan(names, None, None)
+    approx = max(1, (end - body_start) // max_splits)
+    offsets = [body_start]
+    while True:
+        nxt = data.find(b"<row", offsets[-1] + approx)
+        if nxt < 0 or nxt >= end:
+            break
+        offsets.append(nxt)
+    offsets.append(end)
+    split = SheetSplit(
+        offsets, header.start_col, header.num_cols, header.row_idx, fast
+    )
+    return ExcelScan(names, split, data)
 
 
 def infer_schema(
@@ -171,14 +339,16 @@ def infer_schema(
     skip_rows: int = 0,
 ) -> T.StructType:
     """Driver-side schema inference: header row of one file only."""
-    with open_workbook(path) as wb:
-        sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        headers, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
-    if not headers:
-        raise DataToParquetError(f"no header row found in {path!r}")
-    return T.StructType(
-        [T.StructField(h, T.StringType(), True) for h in headers]
-    )
+    return string_schema(plan_scan([path], sheet_name, sheet_index, skip_rows).names)
+
+
+def _task_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """One slice (= one task) per row, in order. An explicit-slices local
+    collection is already perfectly distributed, where createDataFrame
+    plus a repartition pays a full extra shuffle stage (measured: 1.11 s
+    -> 0.52 s for the 16-file fleet parse at the bench fixture size)."""
+    sc = spark.sparkContext
+    return spark.createDataFrame(sc.parallelize(rows, len(rows)), ddl)
 
 
 def read_excel(
@@ -198,103 +368,102 @@ def read_excel(
     skip, batch size. Multi-file reads require a shared schema (taken from the
     first file), mirroring "one conversion = one schema". Passing ``schema``
     (all nullable strings, names = expected header row) skips the driver-side
-    inference open — callers that already parsed the workbook (e.g.
-    :func:`read_excel_all_sheets`) avoid re-opening it; executor tasks still
+    header scan — callers that already parsed the workbook (e.g.
+    :func:`read_excel_all_sheets`) avoid re-reading it; executor tasks still
     validate each file's actual header row against it.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    # expand globs / directories (a directory means every workbook in it)
-    expanded: list[str] = []
-    for p in paths:
-        if os.path.isdir(p):
-            expanded.extend(
-                sorted(
-                    glob.glob(os.path.join(p, "*.xlsx"))
-                    + glob.glob(os.path.join(p, "*.xlsb"))
-                )
-            )
-        elif any(ch in p for ch in "*?["):
-            expanded.extend(sorted(glob.glob(p)))
-        else:
-            expanded.append(p)
-    paths = expanded
+    paths = expand_paths(paths)
     if not paths:
         raise DataToParquetError("no input paths")
-    for p in paths:
-        open_workbook(p).close()  # validate extensions + readability up front
-
-    caller_schema = schema is not None
-    if schema is None:
-        schema = infer_schema(paths[0], sheet_name, sheet_index, skip_rows)
-    n_cols = len(schema)
-    out_names = schema.fieldNames()
-    if len(set(out_names)) < n_cols:
-        # The reference's naming rules can collide (`a, a_2, a` → a, a_2,
-        # a_2). PySpark's pandas-result verification de-duplicates field
-        # names through a set, so the mapInPandas leg must run with unique
-        # internal names; the duplicates are restored afterwards via toDF.
-        seen: dict[str, int] = {}
-        unique = []
-        for name in out_names:
-            k = seen.get(name, 0)
-            seen[name] = k + 1
-            unique.append(name if k == 0 else f"{name}__dup{k}")
-        schema = T.StructType(
-            [T.StructField(u, T.StringType(), True) for u in unique]
-        )
-
-    def reader(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in iterator:
-            for path in pdf["path"]:
-                with open_workbook(path) as wb:
-                    sheet = wb.resolve_sheet(sheet_name, sheet_index)
-                    headers, batches = scan_sheet(
-                        wb, sheet, skip_rows, batch_size
-                    )
-                    if headers != out_names:
-                        raise DataToParquetError(
-                            f"{path!r}: header row {headers} does not match "
-                            f"the schema inferred from the first file "
-                            f"{out_names}"
-                        )
-                    for batch in batches:
-                        yield _batch_to_pdf(batch, cols)
-
-    def _restore_names(df: DataFrame) -> DataFrame:
-        return df if schema.fieldNames() == out_names else df.toDF(*out_names)
-
-    if len(paths) == 1 and paths[0].lower().endswith(".xlsx"):
-        split = _read_single_xlsx_split(
-            spark,
-            paths[0],
-            schema,
-            sheet_name,
-            sheet_index,
-            skip_rows,
-            batch_size,
-            # split fragments never see the header row, so a CALLER-passed
-            # schema is validated against it inside the split's single
-            # workbook open (the streaming `reader` checks per task;
-            # without this a stale schema silently mislabels columns —
-            # r9 review); the inferred-schema path needs no re-check
-            expected_headers=out_names if caller_schema else None,
-        )
-        if split is not None:
-            return _restore_names(split)
-
-    # One slice per workbook via parallelize — an explicit-slices local
-    # collection is already perfectly distributed, where the equivalent
-    # createDataFrame(...).repartition(n) pays a full extra shuffle stage
-    # (measured: 1.11 s -> 0.52 s for the 16-file fleet parse at the bench
-    # fixture size). On a real cluster the file list is driver-side either
-    # way; one task per file remains the unit of parallelism.
-    files = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        T.StructType([T.StructField("path", T.StringType())]),
+    sc = spark.sparkContext
+    # the split's scratch file lives on the driver's local disk — executors
+    # can only read it in local mode (cluster mode would need a shared FS)
+    local = sc.master.startswith("local")
+    scan = plan_scan(
+        paths,
+        sheet_name,
+        sheet_index,
+        skip_rows,
+        expected=schema.fieldNames() if schema is not None else None,
+        max_splits=max(1, min(sc.defaultParallelism, 64)) if local else 0,
     )
-    return _restore_names(files.mapInPandas(reader, schema))
+    out_names = scan.names
+    # read_file's batches carry unique names (format("excel") has no way
+    # to rename afterwards); here the duplicates the reference naming
+    # rules can produce are restored via toDF
+    arrow_schema = string_schema(unique_names(out_names))
+    if scan.split is not None:
+        df = _split_frame(spark, paths[0], scan, arrow_schema, batch_size)
+    else:
+
+        def reader(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                for path in rb.column(0).to_pylist():
+                    yield from read_file(
+                        path, out_names, sheet_name, sheet_index, skip_rows, batch_size
+                    )
+
+        files = _task_frame(spark, [(p,) for p in paths], "path string")
+        df = files.mapInArrow(reader, arrow_schema)
+    return df if arrow_schema.fieldNames() == out_names else df.toDF(*out_names)
+
+
+def _split_frame(
+    spark: SparkSession,
+    path: str,
+    scan: ExcelScan,
+    schema: T.StructType,
+    batch_size: int,
+) -> DataFrame:
+    """Parallelize ONE large .xlsx across tasks, one per planned byte range.
+
+    The deflate stream itself can't be range-read, so the planner's one
+    inflate of the sheet part is written to a scratch file, and each task
+    reads its range of whole ``<row>`` elements, wraps it in a synthetic
+    root and decodes it through :func:`.xlsx.decode_rows` (namespace-free
+    fragments) — the streaming path's decoders and densify helper.
+    ``test_split_path_equivalence`` pins the two paths to the same rows.
+    """
+    import atexit
+    import tempfile
+
+    split = scan.split
+    scratch = tempfile.NamedTemporaryFile(
+        prefix="d2p_sheet_", suffix=".xml", delete=False
+    )
+    scratch.write(scan.sheet_xml)
+    scratch.close()
+    scratch_path = scratch.name
+    atexit.register(lambda: os.path.exists(scratch_path) and os.remove(scratch_path))
+    names = schema.fieldNames()
+
+    def frag_reader(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sst: list[str] | None = None
+        for rb in batches:
+            for lo, hi in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+                if sst is None:
+                    with XlsxWorkbook(path) as wb:
+                        sst = wb._shared_strings()
+                with open(scratch_path, "rb") as f:
+                    f.seek(lo)
+                    frag = f.read(hi - lo)
+                rows = decode_rows(
+                    b"<sheetData>" + frag + b"</sheetData>", sst, "", split.fast
+                )
+                # leading rows + header row were planned on the driver
+                data_rows = (r for r in rows if r[0] > split.header_row_idx)
+                yield from _record_batches(
+                    _dense_batches(
+                        data_rows, split.start_col, split.num_cols, batch_size
+                    ),
+                    names,
+                )
+
+    offsets = split.offsets
+    ranges = list(zip(offsets, offsets[1:]))
+    return _task_frame(spark, ranges, "lo long, hi long").mapInArrow(
+        frag_reader, schema
+    )
 
 
 def read_excel_all_sheets(
@@ -323,8 +492,8 @@ def read_excel_all_sheets(
     file split parallelism included), and the union is a zero-shuffle
     plan-level concatenation — Spark unions are not exchanges. The
     workbook is parsed ONCE on the driver (sheet list + every header
-    row); each per-sheet plan receives its schema instead of re-opening
-    the file.
+    row); each per-sheet plan receives its schema instead of re-scanning
+    the header.
 
     Sheets whose header names collide after the reference dedup-suffix
     rules (the ``a, a_2, a`` edge read_excel supports positionally) are
@@ -366,12 +535,7 @@ def read_excel_all_sheets(
             sheet_name=name,
             skip_rows=skip_rows,
             batch_size=batch_size,
-            schema=T.StructType(
-                [
-                    T.StructField(h, T.StringType(), True)
-                    for h in headers[name]
-                ]
-            ),
+            schema=string_schema(headers[name]),
         ).withColumn(sheet_column, F.lit(name))
         out = (
             part
@@ -379,151 +543,3 @@ def read_excel_all_sheets(
             else out.unionByName(part, allowMissingColumns=True)
         )
     return out
-
-
-def _read_single_xlsx_split(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    sheet_name: str | None,
-    sheet_index: int | None,
-    skip_rows: int,
-    batch_size: int,
-    expected_headers: list[str] | None = None,
-) -> DataFrame | None:
-    """Parallelize ONE large .xlsx across tasks by splitting the sheet XML
-    at ``<row`` boundaries.
-
-    The deflate stream itself can't be range-read, so the driver inflates
-    the sheet part once to a scratch file (bytes, no parsing — cheap), scans
-    for row-start offsets with C-speed ``bytes.find``, and hands each task a
-    byte range aligned on whole ``<row>`` elements. Tasks wrap their slice
-    in a synthetic root and run the same ``walk_rows`` decoder (namespace-
-    free fragments), so semantics are identical to the streaming path — the
-    golden tests run through both.
-
-    Returns None for small sheets (single-task streaming path is faster).
-    """
-    import tempfile
-
-    # the scratch file lives on the driver's local disk — executors can only
-    # read it in local mode (cluster mode would need a shared scratch FS)
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-
-    with XlsxWorkbook(path) as wb:
-        sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        member = dict(wb._sheet_targets)[sheet]
-        info = wb._zip.getinfo(member)
-        if info.file_size < SPLIT_THRESHOLD_BYTES:
-            return None
-        dims = wb.dimensions(sheet)
-        if dims is None:
-            # no declared dimension box → geometry must be inferred from the
-            # cell stream; only the streaming path implements that
-            return None
-        # split fragments index columns positionally and never see the
-        # header row, so a CALLER-passed schema is validated here on the
-        # already-open workbook (one header-row scan, no extra open —
-        # the streaming path's per-task check has no split equivalent)
-        if expected_headers is not None:
-            actual, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
-            if actual != expected_headers:
-                raise DataToParquetError(
-                    f"{path!r}: header row {actual} does not match the "
-                    f"provided schema {expected_headers}"
-                )
-        data = wb._zip.read(member)
-
-    # fragments re-number r-less rows from 0, which would corrupt the
-    # header-relative indexing — require explicit r attributes throughout
-    # (every mainstream writer emits them; fall back to streaming otherwise)
-    if data.count(b"<row ") != data.count(b"<row r="):
-        return None
-
-    # geometry + header row resolved driver-side (header text already went
-    # into `schema` via infer_schema)
-    start = data.find(b"<sheetData")
-    end = data.rfind(b"</sheetData>")
-    if start < 0 or end < 0:
-        return None
-    body_start = data.find(b"<row", start)
-    if body_start < 0 or body_start > end:
-        return None
-
-    n_splits = max(1, min(spark.sparkContext.defaultParallelism, 64))
-    approx = max(1, (end - body_start) // n_splits)
-    offsets = [body_start]
-    pos = body_start
-    while True:
-        nxt = data.find(b"<row", pos + approx)
-        if nxt < 0 or nxt >= end:
-            break
-        offsets.append(nxt)
-        pos = nxt
-    offsets.append(end)
-
-    scratch = tempfile.NamedTemporaryFile(
-        prefix="d2p_sheet_", suffix=".xml", delete=False
-    )
-    scratch.write(data)
-    scratch.close()
-    scratch_path = scratch.name
-    import atexit
-
-    atexit.register(lambda: os.path.exists(scratch_path) and os.remove(scratch_path))
-    # eligibility proved once driver-side over the WHOLE sheet buffer; every
-    # fragment inherits it
-    use_fast = _fast_path_eligible(data)
-    del data
-
-    (r0, c0), (_, c1) = dims  # dims presence checked above
-    start_col, num_cols = c0, c1 - c0 + 1
-    header_row_idx = r0 + skip_rows
-
-    ranges = [
-        (scratch_path, offsets[i], offsets[i + 1], i)
-        for i in range(len(offsets) - 1)
-    ]
-    cols = [f.name for f in schema.fields]
-    n_cols = len(cols)
-    sst_source = path
-
-    def frag_reader(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        sst: list[str] | None = None
-        for pdf in iterator:
-            for xml_path, lo, hi, _idx in pdf.itertuples(index=False):
-                if sst is None:
-                    with XlsxWorkbook(sst_source) as wb2:
-                        sst = wb2._shared_strings()
-                with open(xml_path, "rb") as f:
-                    f.seek(lo)
-                    frag = f.read(hi - lo)
-                wrapped = b"<sheetData>" + frag + b"</sheetData>"
-                end_col = start_col + num_cols
-                buf: list[list[str | None]] = []
-                rows_iter = (
-                    walk_rows_fast(frag, sst)
-                    if use_fast
-                    else walk_rows(io.BytesIO(wrapped), "", sst)
-                ) or walk_rows(io.BytesIO(wrapped), "", sst)
-                for row, cells in rows_iter:
-                    if row <= header_row_idx:
-                        continue  # leading rows + header (driver-side)
-                    dense: list[str | None] = [None] * num_cols
-                    for col, s in cells:
-                        if start_col <= col < end_col:
-                            dense[col - start_col] = s
-                    buf.append(dense)
-                    if len(buf) >= batch_size:
-                        yield _batch_to_pdf(buf, cols)
-                        buf = []
-                if buf:
-                    yield _batch_to_pdf(buf, cols)
-
-    rdf = spark.createDataFrame(
-        ranges, "xml_path string, lo long, hi long, idx int"
-    ).repartitionByRange(len(ranges), "idx")
-    return rdf.mapInPandas(frag_reader, schema)

@@ -15,12 +15,11 @@ Exposes the same interface as :class:`.xlsx.XlsxWorkbook` so the Spark source
 from __future__ import annotations
 
 import struct
-import zipfile
 from typing import BinaryIO, Iterator
-from xml.etree import ElementTree as ET
 
 from ..errors import DataToParquetError
 from ..kernels import CellValue
+from .xlsx import ZipWorkbook
 
 __all__ = ["XlsbWorkbook"]
 
@@ -144,35 +143,14 @@ def _real_to_cell(v: float) -> CellValue:
     return CellValue("float", v)
 
 
-class XlsbWorkbook:
+class XlsbWorkbook(ZipWorkbook):
     """Lazily-scanning .xlsb workbook with the XlsxWorkbook interface."""
 
-    def __init__(self, path: str) -> None:
-        self.path = path
-        try:
-            self._zip = zipfile.ZipFile(path)
-        except (zipfile.BadZipFile, OSError) as e:
-            raise DataToParquetError(f"cannot open xlsb {path!r}: {e}") from e
-        self._sheet_targets = self._load_sheet_map()
-        self._sst: list[str] | None = None
+    _KIND = "xlsb"
+    _RELS = "xl/_rels/workbook.bin.rels"
 
-    # -- workbook structure ------------------------------------------------
     def _load_sheet_map(self) -> list[tuple[str, str]]:
-        rels: dict[str, str] = {}
-        try:
-            with self._zip.open("xl/_rels/workbook.bin.rels") as f:
-                ns = "{http://schemas.openxmlformats.org/package/2006/relationships}"
-                for _, el in ET.iterparse(f):
-                    if el.tag == f"{ns}Relationship":
-                        target = el.get("Target", "")
-                        target = (
-                            target.lstrip("/")
-                            if target.startswith("/")
-                            else "xl/" + target
-                        )
-                        rels[el.get("Id", "")] = target
-        except KeyError:
-            pass
+        rels = self._rel_targets()
         sheets: list[tuple[str, str]] = []
         with self._zip.open("xl/workbook.bin") as f:
             for rid, payload in iter_records(f):
@@ -189,51 +167,22 @@ class XlsbWorkbook:
                 sheets.append((name, target))
         return sheets
 
-    @property
-    def sheet_names(self) -> list[str]:
-        return [name for name, _ in self._sheet_targets]
-
-    def resolve_sheet(
-        self, sheet_name: str | None = None, sheet_index: int | None = None
-    ) -> str:
-        names = self.sheet_names
-        if sheet_name is not None:
-            if sheet_name not in names:
-                raise DataToParquetError(f"Sheet {sheet_name!r} not found")
-            return sheet_name
-        if sheet_index is not None:
-            if sheet_index >= len(names) or sheet_index < 0:
-                raise DataToParquetError(
-                    f"Sheet index {sheet_index} out of bounds"
-                )
-            return names[sheet_index]
-        if not names:
-            raise DataToParquetError("No worksheets found")
-        return names[0]
-
-    # -- shared strings ----------------------------------------------------
-    def _shared_strings(self) -> list[str]:
-        if self._sst is None:
-            sst: list[str] = []
-            try:
-                with self._zip.open("xl/sharedStrings.bin") as f:
-                    for rid, payload in iter_records(f):
-                        if rid == BRT_SST_ITEM:
-                            # RichStr: 1 flag byte, then XLWideString (runs
-                            # and phonetic data follow; skipped by length)
-                            s, _ = _wide_string(payload, 1)
-                            sst.append(s)
-            except KeyError:
-                pass
-            self._sst = sst
-        return self._sst
+    def _load_shared_strings(self) -> list[str]:
+        sst: list[str] = []
+        with self._zip.open("xl/sharedStrings.bin") as f:
+            for rid, payload in iter_records(f):
+                if rid == BRT_SST_ITEM:
+                    # RichStr: 1 flag byte, then XLWideString (runs and
+                    # phonetic data follow; skipped by length)
+                    s, _ = _wide_string(payload, 1)
+                    sst.append(s)
+        return sst
 
     # -- cell stream -------------------------------------------------------
     def dimensions(
         self, sheet: str
     ) -> tuple[tuple[int, int], tuple[int, int]] | None:
-        member = dict(self._sheet_targets)[sheet]
-        with self._zip.open(member) as f:
+        with self._zip.open(self.sheet_member(sheet)) as f:
             for rid, payload in iter_records(f):
                 if rid == BRT_WS_DIM:
                     r0, r1, c0, c1 = struct.unpack_from("<IIII", payload, 0)
@@ -245,9 +194,8 @@ class XlsbWorkbook:
     def iter_cells(self, sheet: str) -> Iterator[tuple[int, int, CellValue]]:
         """Sparse row-major cell stream (row, col, CellValue)."""
         sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
         row = 0
-        with self._zip.open(member) as f:
+        with self._zip.open(self.sheet_member(sheet)) as f:
             for rid, payload in iter_records(f):
                 if rid == BRT_ROW_HDR:
                     (row,) = struct.unpack_from("<I", payload, 0)
@@ -303,12 +251,3 @@ class XlsbWorkbook:
             cells.append((col, cell_to_string(value)))
         if cur_row is not None:
             yield cur_row, cells
-
-    def close(self) -> None:
-        self._zip.close()
-
-    def __enter__(self) -> "XlsbWorkbook":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

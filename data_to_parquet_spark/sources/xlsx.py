@@ -19,6 +19,7 @@ larger sheets keep the streaming bound.
 
 from __future__ import annotations
 
+import io
 import re
 import zipfile
 from typing import Iterator
@@ -26,9 +27,8 @@ from xml.etree import ElementTree as ET
 
 from ..errors import DataToParquetError
 from ..kernels import _ERROR_TOKENS as _XLSX_ERR_TOKENS
-from ..kernels import CellValue
 
-__all__ = ["XlsxWorkbook", "parse_cell_ref", "parse_dimension"]
+__all__ = ["XlsxWorkbook", "ZipWorkbook", "parse_cell_ref", "parse_dimension"]
 
 _MAIN_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = (
@@ -414,6 +414,17 @@ def walk_rows_fast(data: bytes, sst: list[str]):
     return rows()
 
 
+def decode_rows(data: bytes, sst: list[str], ns: str = _MAIN_NS, fast=None):
+    """The one decoder choice for an in-memory sheet buffer:
+    :func:`walk_rows_fast` when ``fast`` (default: the buffer's own
+    :func:`_fast_path_eligible` verdict) holds and the text decodes, else
+    :func:`walk_rows` under element prefix ``ns``."""
+    if fast is None:
+        fast = _fast_path_eligible(data)
+    rows = walk_rows_fast(data, sst) if fast else None
+    return rows if rows is not None else walk_rows(io.BytesIO(data), ns, sst)
+
+
 def parse_cell_ref(ref: str) -> tuple[int, int]:
     """``"B3"`` -> (row=2, col=1), both 0-based."""
     m = _CELL_REF_RE.match(ref)
@@ -440,24 +451,34 @@ def _text_of(elem: ET.Element) -> str:
     return "".join(t.text or "" for t in elem.iter(f"{_MAIN_NS}t"))
 
 
-class XlsxWorkbook:
-    """Lazily-scanning .xlsx workbook (reference O1/O4 semantics)."""
+class ZipWorkbook:
+    """Zip container, sheet map and sheet selection shared by the xlsx and
+    xlsb readers; subclasses parse their own workbook part and shared
+    strings."""
+
+    _KIND: str  # format name in the open error
+    _RELS: str  # workbook relationships part
 
     def __init__(self, path: str) -> None:
         self.path = path
         try:
             self._zip = zipfile.ZipFile(path)
         except (zipfile.BadZipFile, OSError) as e:
-            raise DataToParquetError(f"cannot open xlsx {path!r}: {e}") from e
+            raise DataToParquetError(
+                f"cannot open {self._KIND} {path!r}: {e}"
+            ) from e
         self._sheet_targets = self._load_sheet_map()
         self._sst: list[str] | None = None
 
-    # -- workbook structure ------------------------------------------------
     def _load_sheet_map(self) -> list[tuple[str, str]]:
         """[(sheet_name, zip_member_path)] in workbook order."""
+        raise NotImplementedError
+
+    def _rel_targets(self) -> dict[str, str]:
+        """Workbook relationship id -> zip member path."""
         rels: dict[str, str] = {}
         try:
-            with self._zip.open("xl/_rels/workbook.xml.rels") as f:
+            with self._zip.open(self._RELS) as f:
                 for _, el in ET.iterparse(f):
                     if el.tag == f"{_PKG_REL_NS}Relationship":
                         target = el.get("Target", "")
@@ -468,18 +489,15 @@ class XlsxWorkbook:
                         rels[el.get("Id", "")] = target
         except KeyError:
             pass
-        sheets: list[tuple[str, str]] = []
-        with self._zip.open("xl/workbook.xml") as f:
-            for _, el in ET.iterparse(f):
-                if el.tag == f"{_MAIN_NS}sheet":
-                    rid = el.get(f"{_REL_NS}id", "")
-                    target = rels.get(rid, f"xl/worksheets/sheet{len(sheets) + 1}.xml")
-                    sheets.append((el.get("name", f"Sheet{len(sheets) + 1}"), target))
-        return sheets
+        return rels
 
     @property
     def sheet_names(self) -> list[str]:
         return [name for name, _ in self._sheet_targets]
+
+    def sheet_member(self, sheet: str) -> str:
+        """Zip member path of the sheet part."""
+        return dict(self._sheet_targets)[sheet]
 
     def resolve_sheet(
         self, sheet_name: str | None = None, sheet_index: int | None = None
@@ -501,26 +519,56 @@ class XlsxWorkbook:
             raise DataToParquetError("No worksheets found")
         return names[0]
 
-    # -- shared strings ----------------------------------------------------
     def _shared_strings(self) -> list[str]:
         if self._sst is None:
-            sst: list[str] = []
             try:
-                with self._zip.open("xl/sharedStrings.xml") as f:
-                    for _, el in ET.iterparse(f):
-                        if el.tag == f"{_MAIN_NS}si":
-                            sst.append(_text_of(el))
-                            el.clear()
-            except KeyError:
-                pass
-            self._sst = sst
+                self._sst = self._load_shared_strings()
+            except KeyError:  # no shared-strings part
+                self._sst = []
         return self._sst
 
-    # -- cell stream -------------------------------------------------------
+    def _load_shared_strings(self) -> list[str]:
+        raise NotImplementedError
+
+    def close(self) -> None:
+        self._zip.close()
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+class XlsxWorkbook(ZipWorkbook):
+    """Lazily-scanning .xlsx workbook (reference O1/O4 semantics)."""
+
+    _KIND = "xlsx"
+    _RELS = "xl/_rels/workbook.xml.rels"
+
+    def _load_sheet_map(self) -> list[tuple[str, str]]:
+        rels = self._rel_targets()
+        sheets: list[tuple[str, str]] = []
+        with self._zip.open("xl/workbook.xml") as f:
+            for _, el in ET.iterparse(f):
+                if el.tag == f"{_MAIN_NS}sheet":
+                    rid = el.get(f"{_REL_NS}id", "")
+                    target = rels.get(rid, f"xl/worksheets/sheet{len(sheets) + 1}.xml")
+                    sheets.append((el.get("name", f"Sheet{len(sheets) + 1}"), target))
+        return sheets
+
+    def _load_shared_strings(self) -> list[str]:
+        sst: list[str] = []
+        with self._zip.open("xl/sharedStrings.xml") as f:
+            for _, el in ET.iterparse(f):
+                if el.tag == f"{_MAIN_NS}si":
+                    sst.append(_text_of(el))
+                    el.clear()
+        return sst
+
     def dimensions(self, sheet: str) -> tuple[tuple[int, int], tuple[int, int]] | None:
         """The sheet's declared dimension box, if present."""
-        member = dict(self._sheet_targets)[sheet]
-        with self._zip.open(member) as f:
+        with self._zip.open(self.sheet_member(sheet)) as f:
             for event, el in ET.iterparse(f, events=("start",)):
                 tag = el.tag
                 if tag == f"{_MAIN_NS}dimension":
@@ -530,116 +578,23 @@ class XlsxWorkbook:
                     return None  # no dimension element before data
         return None
 
-    def iter_cells(self, sheet: str) -> Iterator[tuple[int, int, CellValue]]:
-        """Sparse row-major cell stream: yields (row, col, CellValue).
-
-        Mirrors calamine's ``worksheet_cells_reader`` (src/lib.rs:42-44):
-        only physically-present cells are yielded.
-        """
-        sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
-        row_idx = -1
-        col_idx = -1
-        with self._zip.open(member) as f:
-            context = ET.iterparse(f, events=("start", "end"))
-            for event, el in context:
-                tag = el.tag
-                if event == "start":
-                    if tag == f"{_MAIN_NS}row":
-                        r = el.get("r")
-                        row_idx = (int(r) - 1) if r else row_idx + 1
-                        col_idx = -1
-                    continue
-                # end events
-                if tag == f"{_MAIN_NS}c":
-                    ref = el.get("r")
-                    if ref:
-                        _, col_idx = parse_cell_ref(ref)
-                    else:
-                        col_idx += 1
-                    yield row_idx, col_idx, self._cell_value(el, sst)
-                    el.clear()
-                elif tag == f"{_MAIN_NS}row":
-                    el.clear()
-
-    @staticmethod
-    def _cell_value(c: ET.Element, sst: list[str]) -> CellValue:
-        """Decode one ``<c>`` element into a tagged CellValue.
-
-        Cell types per ECMA-376 §18.18.11 (ST_CellType): ``s`` shared string,
-        ``str`` formula string, ``inlineStr``, ``b`` boolean, ``e`` error,
-        ``d`` ISO date, ``n``/absent number.
-        """
-        t = c.get("t", "n")
-        v_el = c.find(f"{_MAIN_NS}v")
-        if t == "inlineStr":
-            is_el = c.find(f"{_MAIN_NS}is")
-            return CellValue("string", _text_of(is_el) if is_el is not None else "")
-        if v_el is None or v_el.text is None:
-            return CellValue("empty", None)
-        raw = v_el.text
-        if t == "s":
-            try:
-                return CellValue("string", sst[int(raw)])
-            except (ValueError, IndexError):
-                return CellValue("string", raw)
-        if t == "str":
-            return CellValue("string", raw)
-        if t == "b":
-            return CellValue("bool", raw not in ("0", "false", "FALSE"))
-        if t == "e":
-            return CellValue("error", raw)
-        if t == "d":
-            return CellValue("iso", raw)
-        # number: int if losslessly integral text within i64 (calamine
-        # parses i64 first, falls back to f64)
-        try:
-            iv = int(raw)
-            if -(2**63) <= iv < 2**63:
-                return CellValue("int", iv)
-        except ValueError:
-            pass
-        try:
-            return CellValue("float", float(raw))
-        except ValueError:
-            return CellValue("string", raw)
-
-    # -- fused fast row scan ----------------------------------------------
     def iter_rows_str(
         self, sheet: str
     ) -> Iterator[tuple[int, list[tuple[int, str]]]]:
-        """Fast path: yields (row_idx, [(col, normalized_string), ...]) for
-        each physically-present row, cells already normalized per the
+        """Yields (row_idx, [(col, normalized_string), ...]) for each
+        physically-present row, cells already normalized per the
         reference stringify rules (``src/lib.rs:387-400``).
 
-        ~3× faster than ``iter_cells``+``cell_to_string``: one Python-level
-        iterparse event per ROW (the C parser builds the row subtree),
-        direct-child walks instead of per-cell events, no regex and no
-        intermediate CellValue allocations. The semantic contract is
-        identical — the golden tests run against both paths.
+        Sheet parts up to ``_FAST_BUFFER_LIMIT`` are inflated into memory
+        and go through :func:`decode_rows`; larger ones stream through
+        :func:`walk_rows` (one ``<row>`` subtree resident at a time).
+        ``tests/test_excel_source.py::test_fast_and_et_walkers_agree`` and
+        the property scan pin the two decoders to the same output.
         """
         sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
-        info = self._zip.getinfo(member)
-        if info.file_size <= _FAST_BUFFER_LIMIT:
-            data = self._zip.read(member)
-            if _fast_path_eligible(data):
-                fast = walk_rows_fast(data, sst)
-                if fast is not None:
-                    yield from fast
-                    return
-            import io as _io
-
-            yield from walk_rows(_io.BytesIO(data), _MAIN_NS, sst)
+        member = self.sheet_member(sheet)
+        if self._zip.getinfo(member).file_size <= _FAST_BUFFER_LIMIT:
+            yield from decode_rows(self._zip.read(member), sst)
             return
         with self._zip.open(member) as f:
             yield from walk_rows(f, _MAIN_NS, sst)
-
-    def close(self) -> None:
-        self._zip.close()
-
-    def __enter__(self) -> "XlsxWorkbook":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

@@ -157,8 +157,8 @@ def test_full_record_carries_adjudication_forward(tmp_path):
 def test_bounded_line_selects_changed_and_new(tmp_path):
     """r16 (r15 VERDICT item 1): the final stdout line must be a complete
     contract line whose queries map is bounded — first-contact queries
-    always included, then the largest >10% movers vs the committed prior,
-    capped at _BOUNDED_MAX, 2-decimal values — so the driver's ~2.5 kB
+    first, then the largest >10% movers vs the committed prior, all
+    together capped at _BOUNDED_MAX, 2-decimal values — so the driver's ~2.5 kB
     tail capture always ends in one parseable JSON object with real
     round-over-round deltas."""
     from bench import _BOUNDED_MAX, _bounded_line
@@ -180,6 +180,15 @@ def test_bounded_line_selects_changed_and_new(tmp_path):
     times = {f"q{i:03d}": 2.0 for i in range(150)}
     out = _bounded_line(times, summary, root=str(tmp_path))
     assert len(out["queries"]) == _BOUNDED_MAX
+    # many first-contact queries: they too count against the cap, and the
+    # marker records how many candidates did not fit
+    times = {f"q{i:03d}": 1.0 for i in range(150)}
+    times["q000"] = 3.0
+    times.update({f"new{i:03d}": 0.1 for i in range(_BOUNDED_MAX + 7)})
+    out = _bounded_line(times, summary, root=str(tmp_path))
+    assert len(out["queries"]) == _BOUNDED_MAX
+    assert all(n.startswith("new") for n in out["queries"])
+    assert "(8 over the cap)" in out["queries_bounded"]
     # sf-mismatched prior -> slowest-N fallback (driver still sees numbers)
     out = _bounded_line(
         {"a": 5.0, "b": 1.0}, {"metric": "t", "sf": 0.01}, root=str(tmp_path)

@@ -8,6 +8,7 @@ import pytest
 from data_to_parquet_spark.api import read_excel
 from data_to_parquet_spark.sources.datasource import register
 
+from .xlsb_fixture import write_xlsb
 from .xlsx_fixture import write_xlsx
 
 
@@ -18,20 +19,22 @@ def registered(spark):
 
 
 def test_format_matches_read_excel(registered, tmp_path):
-    path = str(tmp_path / "t.xlsx")
+    """Both workbook readers (.xlsx and .xlsb) through both surfaces."""
     rows = [["id", "v", ""]] + [
         [i, i * 1.5 if i % 3 else None, "" if i % 2 else f"s{i}"]
         for i in range(25)
     ]
-    write_xlsx(path, {"Data": rows})
-    via_format = registered.read.format("excel").option(
-        "sheet_name", "Data"
-    ).load(path)
-    via_api = read_excel(registered, path, sheet_name="Data")
-    assert via_format.schema == via_api.schema
-    assert sorted(map(tuple, via_format.collect())) == sorted(
-        map(tuple, via_api.collect())
-    )
+    for name, write in (("t.xlsx", write_xlsx), ("t.xlsb", write_xlsb)):
+        path = str(tmp_path / name)
+        write(path, {"Data": rows})
+        via_format = registered.read.format("excel").option(
+            "sheet_name", "Data"
+        ).load(path)
+        via_api = read_excel(registered, path, sheet_name="Data")
+        assert via_format.schema == via_api.schema
+        got = sorted(map(tuple, via_format.collect()))
+        assert got == sorted(map(tuple, via_api.collect()))
+        assert len(got) == 25 and ("1", "1.5", "") in got
 
 
 def test_format_multi_file_and_options(registered, tmp_path):

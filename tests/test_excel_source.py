@@ -333,6 +333,53 @@ def test_split_path_equivalence(spark, tmp_path, monkeypatch):
     assert sorted(_rows(split_df)) == streamed
 
 
+def test_split_planning_opens_and_inflates_once(spark, tmp_path, monkeypatch):
+    """Planning a split-eligible .xlsx opens the workbook once and
+    inflates its sheet part once on the driver: that one buffer feeds
+    the header scan, the eligibility checks and the split offsets. The
+    split's rows equal the streaming path's."""
+    import zipfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from data_to_parquet_spark.sources import xlsx as xlsx_mod
+
+    path = str(tmp_path / "plan_once.xlsx")
+    rows = [["a", "b", "c"]]
+    for i in range(5000):
+        rows.append(
+            [i, None if i % 3 == 0 else f"v{i}", ("empty",) if i % 5 == 0 else i * 1.5]
+        )
+    write_xlsx(path, {"S": rows})
+    with zipfile.ZipFile(path) as z:
+        member = next(n for n in z.namelist() if n.startswith("xl/worksheets/"))
+
+    opens: list[str] = []
+    reads: list[str] = []
+    init, read = xlsx_mod.XlsxWorkbook.__init__, zipfile.ZipFile.read
+
+    def counting_init(self, p):
+        opens.append(p)
+        init(self, p)
+
+    def counting_read(self, name, *args, **kwargs):
+        if name == member:
+            reads.append(name)
+        return read(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    monkeypatch.setattr(xlsx_mod.XlsxWorkbook, "__init__", counting_init)
+    monkeypatch.setattr(zipfile.ZipFile, "read", counting_read)
+    split_df = read_excel(spark, path)
+    assert (len(opens), len(reads)) == (1, 1)
+    monkeypatch.undo()
+
+    assert split_df.rdd.getNumPartitions() > 1  # split path engaged
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10**9)
+    streamed = read_excel(spark, path)
+    assert streamed.rdd.getNumPartitions() == 1  # streaming path
+    assert sorted(_rows(split_df)) == sorted(_rows(streamed))
+
+
 def test_split_path_order_preservation(spark, tmp_path, monkeypatch):
     from data_to_parquet_spark.sources import excel as excel_mod
 

@@ -296,9 +296,9 @@ def _decode_jpeg_ref(data: bytes) -> np.ndarray:
 
 
 def test_decoder_restart_markers_equal_reference():
-    """Reuse the hand-assembled DRI=1 stream from test_jpeg_codec to pin
-    segment advancement + predictor reset against the reference."""
-    from tests.test_jpeg_codec import test_restart_marker_resync  # noqa: F401
+    """Pin segment advancement + predictor reset against the reference
+    on a DRI=1 stream assembled here, following the same recipe as
+    test_jpeg_codec's restart-marker test."""
     import struct
 
     qt = _scaled_quant(_QUANT_LUMA, 90)
@@ -335,3 +335,31 @@ def test_decoder_restart_markers_equal_reference():
     out += b"\xff\xd9"
     data = bytes(out)
     assert np.array_equal(decode_jpeg(data), _decode_jpeg_ref(data))
+
+
+def test_huffman_lut_cache_bounded_for_foreign_tables():
+    """Distinct foreign Huffman tables stop being stored once the cache
+    holds ``_HUFF_LUT_CACHE_MAX`` entries (they are still decoded
+    correctly); the four own-encoder tables are stored regardless."""
+    from data_to_parquet_spark.functions import jpeg
+
+    saved = dict(jpeg._HUFF_LUT_CACHE)
+    jpeg._HUFF_LUT_CACHE.clear()
+    try:
+        bits = [0, 2] + [0] * 14  # two 2-bit codes: 00 -> i, 01 -> i + 1
+        for i in range(jpeg._HUFF_LUT_CACHE_MAX + 10):
+            lut = jpeg._huff_lut(bits, [i, i + 1])
+            assert lut[0] == (2 << 8) | i and lut[1 << 14] == (2 << 8) | (i + 1)
+        assert len(jpeg._HUFF_LUT_CACHE) == jpeg._HUFF_LUT_CACHE_MAX
+        for b, v in (
+            (_DC_LUMA_BITS, _DC_LUMA_VALS),
+            (_AC_LUMA_BITS, _AC_LUMA_VALS),
+            (_DC_CHROMA_BITS, _DC_CHROMA_VALS),
+            (_AC_CHROMA_BITS, _AC_CHROMA_VALS),
+        ):
+            jpeg._huff_lut(b, v)
+        assert jpeg._OWN_HUFF_KEYS <= set(jpeg._HUFF_LUT_CACHE)
+        assert len(jpeg._HUFF_LUT_CACHE) == jpeg._HUFF_LUT_CACHE_MAX + 4
+    finally:
+        jpeg._HUFF_LUT_CACHE.clear()
+        jpeg._HUFF_LUT_CACHE.update(saved)
