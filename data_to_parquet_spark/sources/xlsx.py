@@ -11,10 +11,11 @@ distinction, ``src/lib.rs:398`` vs ``:428-433``).
 Memory profile: ``ElementTree.iterparse`` with element eviction keeps only one
 ``<row>`` subtree resident; the shared-strings table is loaded up front (as
 calamine also does). That bounds per-task memory at O(row + sst), which is the
-same bound the reference claims (``README.md:9``). Exception: sheet parts up
-to ``_FAST_BUFFER_LIMIT`` take the find-based fast path, which buffers the
-whole (inflated) part — per-task memory is then O(min(sheet, limit) + sst);
-larger sheets keep the streaming bound.
+same bound the reference claims (``README.md:9``). Exception: sheet parts and
+shared-strings parts up to ``_FAST_BUFFER_LIMIT`` take the find-based fast
+path, which buffers the whole (inflated) part — per-task memory is then
+O(min(sheet, limit) + min(sst part, limit) + sst); larger parts are streamed
+through ``iterparse``.
 """
 
 from __future__ import annotations
@@ -153,7 +154,12 @@ _MAIN_NS_URI = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _XMLNS_PREFIX_RE = re.compile(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"')
 _ROW_TAIL = " />\t\r\n"
 _ROW_R_RE = re.compile(r'\br="(\d+)"')
-_T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?>(.*?)</t>", re.S)
+# a ``<t>`` run and its text; the lookbehind keeps a self-closing
+# ``<t .../>`` (empty run) from pairing with the next run's ``</t>``
+_T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?(?<!/)>(.*?)</t\s*>", re.S)
+#: Shared-string entry as machine writers emit it: one plain ``<t>`` run
+#: without escapes. Accepted only when every ``<si`` in the part matched.
+_SI_RE = re.compile(r'<si><t(?: xml:space="preserve")?>([^<&]*)</t></si>')
 
 
 def _fast_path_eligible(data: bytes) -> bool:
@@ -179,27 +185,53 @@ def _fast_path_eligible(data: bytes) -> bool:
     return True
 
 
+def _eol(text: str) -> str:
+    """XML 1.0 end-of-line handling (section 2.11), which ElementTree
+    applies while parsing: ``\r\n`` and a lone ``\r`` become ``\n``.
+    A ``&#13;`` reference is not affected; :func:`_unescape` resolves it
+    to ``\r`` afterwards, as ElementTree does."""
+    if "\r" in text:
+        return text.replace("\r\n", "\n").replace("\r", "\n")
+    return text
+
+
+# valid XML text holds only the five predefined entities and numeric
+# character references; html.unescape is not a substitute, because it maps
+# references to U+0080-U+009F through cp1252 where XML keeps the code point
+_XML_REF_RE = re.compile(
+    r"&(?:#x([0-9a-fA-F]{1,6})|#([0-9]{1,7})|(amp|lt|gt|quot|apos));"
+)
+_XML_ENTITIES = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
+
+
+def _xml_ref(m: re.Match) -> str:
+    hex_digits, dec_digits, name = m.groups()
+    if name:
+        return _XML_ENTITIES[name]
+    cp = int(hex_digits, 16) if hex_digits else int(dec_digits)
+    return chr(cp) if cp <= 0x10FFFF else m.group()
+
+
 def _unescape(s: str) -> str:
     if "&" in s:
-        import html
-
-        # valid XML can only contain the five predefined entities + numeric
-        # character references — all of which html.unescape resolves
-        return html.unescape(s)
+        return _XML_REF_RE.sub(_xml_ref, s)
     return s
 
 
 #: Strict single-pass cell tokenizer for the three machine-written cell
-#: shapes (r15 optimization): self-closing, ``<v>`` scalar without XML
-#: escapes, and single-run ``<t xml:space="preserve">`` inline string
-#: without escapes. A row parses on this tier ONLY when consecutive
-#: matches tile its entire body (checked below) — any other attribute,
-#: attribute order, escape, or element form leaves a gap and the row
-#: falls back to the generic find-based decoder, so this tier can never
-#: be silently wrong: per cell it either proves one of the three shapes
-#: or defers.
+#: shapes: self-closing, ``<v>`` scalar without XML escapes, and
+#: single-run ``<t xml:space="preserve">`` inline string without escapes.
+#: Attributes are accepted only as ``r``, then an optional numeric style
+#: ``s``, then an optional ``t`` — the order ECMA-376 ``CT_Cell`` declares
+#: and Excel writes (every number-formatted cell, dates included, carries
+#: ``s=``). Styles never affect the decoded text, so ``s`` is skipped. A
+#: row parses on this tier ONLY when consecutive matches tile its entire
+#: body (checked below) — any other attribute, attribute order, escape,
+#: or element form leaves a gap and the row falls back to the generic
+#: find-based decoder, so this tier can never be silently wrong: per cell
+#: it either proves one of the three shapes or defers.
 _STRICT_CELL_RE = re.compile(
-    r'<c r="([A-Z]{1,3})\d*"(?: t="([a-zA-Z]+)")?'
+    r'<c r="([A-Z]{1,3})\d*"(?: s="\d+")?(?: t="([a-zA-Z]+)")?'
     r'(?:/>'
     r"|><v>([^<&]*)</v></c>"
     r'|><is><t xml:space="preserve">([^<&]*)</t></is></c>)'
@@ -273,7 +305,7 @@ def walk_rows_fast(data: bytes, sst: list[str]):
     from ..kernels import format_float
 
     try:
-        text = data.decode("utf-8")
+        text = _eol(data.decode("utf-8"))
     except UnicodeDecodeError:
         return None
     err_tokens = _XLSX_ERR_TOKENS
@@ -345,6 +377,7 @@ def walk_rows_fast(data: bytes, sst: list[str]):
                             tend = content.find("</t>", tgt)
                             if (
                                 tend != -1
+                                and content.find("<", tgt, tend) == -1
                                 and content.find("<t", tend + 4) == -1
                             ):
                                 out.append(
@@ -425,6 +458,51 @@ def decode_rows(data: bytes, sst: list[str], ns: str = _MAIN_NS, fast=None):
     return rows if rows is not None else walk_rows(io.BytesIO(data), ns, sst)
 
 
+def load_shared_strings_fast(data: bytes) -> list[str] | None:
+    """Find-based shared-strings loader over a whole ``sharedStrings.xml``
+    buffer; only called when ``_fast_path_eligible`` proved the
+    preconditions. Same result as :func:`load_shared_strings` (each
+    ``<si>`` is the concatenated text of all its ``<t>`` descendants), or
+    None when the buffer is not UTF-8 or holds a ``<si`` it cannot
+    delimit, so the caller parses it with ElementTree instead."""
+    try:
+        text = _eol(data.decode("utf-8"))
+    except UnicodeDecodeError:
+        return None
+    # strict tier: matched text holds no "<" and eligibility rules out
+    # comments and CDATA, so each match is one whole plain entry; when
+    # the matches account for every "<si" in the part, they are the table
+    sst = _SI_RE.findall(text)
+    if len(sst) == text.count("<si"):
+        return sst
+    sst = []
+    for part in text.split("<si")[1:]:
+        gt = part.find(">")
+        if gt < 0 or part[0] not in ">/ \t\n":
+            return None  # another element named "si…"; let ET decide
+        if part[:gt].endswith("/"):  # <si/> → empty entry
+            sst.append("")
+            continue
+        end = part.find("</si>", gt)
+        if end < 0:
+            return None
+        sst.append(
+            "".join(_unescape(t) for t in _T_TEXT_RE.findall(part, gt, end))
+        )
+    return sst
+
+
+def load_shared_strings(stream) -> list[str]:
+    """ElementTree shared-strings loader: streams ``<si>`` entries with
+    element eviction, each the text of all its ``<t>`` descendants."""
+    sst: list[str] = []
+    for _, el in ET.iterparse(stream):
+        if el.tag == f"{_MAIN_NS}si":
+            sst.append("".join(t.text or "" for t in el.iter(f"{_MAIN_NS}t")))
+            el.clear()
+    return sst
+
+
 def parse_cell_ref(ref: str) -> tuple[int, int]:
     """``"B3"`` -> (row=2, col=1), both 0-based."""
     m = _CELL_REF_RE.match(ref)
@@ -444,11 +522,6 @@ def parse_dimension(ref: str) -> tuple[tuple[int, int], tuple[int, int]]:
         return parse_cell_ref(a), parse_cell_ref(b)
     cell = parse_cell_ref(ref)
     return cell, cell
-
-
-def _text_of(elem: ET.Element) -> str:
-    """Concatenated text of all <t> descendants (rich-text runs)."""
-    return "".join(t.text or "" for t in elem.iter(f"{_MAIN_NS}t"))
 
 
 class ZipWorkbook:
@@ -558,13 +631,17 @@ class XlsxWorkbook(ZipWorkbook):
         return sheets
 
     def _load_shared_strings(self) -> list[str]:
-        sst: list[str] = []
-        with self._zip.open("xl/sharedStrings.xml") as f:
-            for _, el in ET.iterparse(f):
-                if el.tag == f"{_MAIN_NS}si":
-                    sst.append(_text_of(el))
-                    el.clear()
-        return sst
+        """Parts up to ``_FAST_BUFFER_LIMIT`` are inflated into memory and
+        go through :func:`load_shared_strings_fast` when eligible (else
+        ElementTree over the buffer); larger ones stream through
+        :func:`load_shared_strings`."""
+        member = "xl/sharedStrings.xml"
+        if self._zip.getinfo(member).file_size > _FAST_BUFFER_LIMIT:
+            with self._zip.open(member) as f:
+                return load_shared_strings(f)
+        data = self._zip.read(member)
+        sst = load_shared_strings_fast(data) if _fast_path_eligible(data) else None
+        return sst if sst is not None else load_shared_strings(io.BytesIO(data))
 
     def dimensions(self, sheet: str) -> tuple[tuple[int, int], tuple[int, int]] | None:
         """The sheet's declared dimension box, if present."""

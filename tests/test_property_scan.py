@@ -145,18 +145,41 @@ def test_xlsb_scan_matches_model(grid, skip, tmp_path_factory):
     assert rows == m_rows
 
 
+# the differential fuzz below also draws the XML end-of-line characters,
+# which ElementTree normalizes and the fast paths must normalize alike
+_walker_cell = st.one_of(
+    _cell,
+    st.text(
+        alphabet=st.characters(
+            codec="utf-8",
+            exclude_categories=("Cs", "Cc"),
+            include_characters="\r\n\t",
+        ),
+        max_size=8,
+    ),
+)
+
+_walker_grid = st.lists(
+    st.lists(_walker_cell, min_size=1, max_size=6), min_size=1, max_size=8
+)
+
+
 @settings(max_examples=40, deadline=None)
-@given(grid=_grid)
-def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
+@given(grid=_walker_grid, shared_strings=st.booleans())
+def test_fast_walker_matches_et_walker(grid, shared_strings, tmp_path_factory):
     """Differential fuzz: the find-based fast walker and the ElementTree
     walker must emit identical (row, cells) streams for any fixture the
-    writer can produce (sparse cells, unicode, entities, floats, bools)."""
+    writer can produce (sparse cells, unicode, entities, floats, bools,
+    raw CR/LF/tab); with shared strings, the fast and ElementTree
+    shared-strings loaders must build identical tables."""
     import io
 
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
         _MAIN_NS,
         _fast_path_eligible,
+        load_shared_strings,
+        load_shared_strings_fast,
         walk_rows,
         walk_rows_fast,
     )
@@ -164,7 +187,7 @@ def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
     path = str(
         tmp_path_factory.mktemp("walkers") / "grid.xlsx"
     )
-    write_xlsx(path, {"S": grid})
+    write_xlsx(path, {"S": grid}, shared_strings=shared_strings)
     with XlsxWorkbook(path) as wb:
         member = dict(wb._sheet_targets)["S"]
         data = wb._zip.read(member)
@@ -172,4 +195,9 @@ def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
         et = list(walk_rows(io.BytesIO(data), _MAIN_NS, sst))
+        if sst:
+            sst_data = wb._zip.read("xl/sharedStrings.xml")
+            assert _fast_path_eligible(sst_data)
+            assert load_shared_strings_fast(sst_data) == sst
+            assert load_shared_strings(io.BytesIO(sst_data)) == sst
     assert fast == et
