@@ -144,11 +144,14 @@ def walk_rows(stream, ns: str, sst: list[str]):
 # disqualifies the buffer and the ET walker runs instead, so the fast path
 # can never be silently wrong: it either proves its preconditions or defers.
 
-# Per-task inflate-to-memory bound for the fast path. Deliberately small:
-# with one task per workbook, every concurrent task may hold buffer + decoded
-# text (~3× this) at once, so the cap — not O(row) streaming — becomes the
-# per-task memory bound whenever the fast path engages. Sheets above the cap
-# use the streaming ET walker (or the XML-split path for single large files).
+# Per-part inflate-to-memory bound for the fast path. Deliberately small:
+# with one task per workbook, every concurrent task may hold, for the sheet
+# part, buffer + decoded text (~3× this) and, for the shared-strings part,
+# buffer + decoded text (+ an end-of-line copy when it holds a raw CR) next
+# to the table itself (~3× this again) at once, so the cap — not O(row)
+# streaming — becomes the per-task memory bound whenever the fast path
+# engages. Parts above the cap stream through ElementTree (sheets may also
+# take the XML-split path for single large files).
 _FAST_BUFFER_LIMIT = 32 * 1024 * 1024
 _MAIN_NS_URI = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _XMLNS_PREFIX_RE = re.compile(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"')
@@ -199,7 +202,7 @@ def _eol(text: str) -> str:
 # character references; html.unescape is not a substitute, because it maps
 # references to U+0080-U+009F through cp1252 where XML keeps the code point
 _XML_REF_RE = re.compile(
-    r"&(?:#x([0-9a-fA-F]{1,6})|#([0-9]{1,7})|(amp|lt|gt|quot|apos));"
+    r"&(?:#x([0-9a-fA-F]+)|#([0-9]+)|(amp|lt|gt|quot|apos));"
 )
 _XML_ENTITIES = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
 
@@ -208,7 +211,12 @@ def _xml_ref(m: re.Match) -> str:
     hex_digits, dec_digits, name = m.groups()
     if name:
         return _XML_ENTITIES[name]
-    cp = int(hex_digits, 16) if hex_digits else int(dec_digits)
+    # leading zeros are allowed; more than 7 significant digits is past
+    # U+10FFFF in either base (and keeps int() off huge decimal strings)
+    digits = (hex_digits or dec_digits).lstrip("0") or "0"
+    if len(digits) > 7:
+        return m.group()
+    cp = int(digits, 16 if hex_digits else 10)
     return chr(cp) if cp <= 0x10FFFF else m.group()
 
 
@@ -461,35 +469,20 @@ def decode_rows(data: bytes, sst: list[str], ns: str = _MAIN_NS, fast=None):
 def load_shared_strings_fast(data: bytes) -> list[str] | None:
     """Find-based shared-strings loader over a whole ``sharedStrings.xml``
     buffer; only called when ``_fast_path_eligible`` proved the
-    preconditions. Same result as :func:`load_shared_strings` (each
-    ``<si>`` is the concatenated text of all its ``<t>`` descendants), or
-    None when the buffer is not UTF-8 or holds a ``<si`` it cannot
-    delimit, so the caller parses it with ElementTree instead."""
+    preconditions. Same result as :func:`load_shared_strings` when every
+    entry is one plain ``<t>`` run without escapes (the shape machine
+    writers emit); None for anything else (rich runs, phonetic runs,
+    entity or character references, a part that is not UTF-8), so the
+    caller parses it with ElementTree instead."""
     try:
         text = _eol(data.decode("utf-8"))
     except UnicodeDecodeError:
         return None
-    # strict tier: matched text holds no "<" and eligibility rules out
-    # comments and CDATA, so each match is one whole plain entry; when
-    # the matches account for every "<si" in the part, they are the table
+    # matched text holds no "<" and eligibility rules out comments and
+    # CDATA, so each match is one whole plain entry; when the matches
+    # account for every "<si" in the part, they are the table
     sst = _SI_RE.findall(text)
-    if len(sst) == text.count("<si"):
-        return sst
-    sst = []
-    for part in text.split("<si")[1:]:
-        gt = part.find(">")
-        if gt < 0 or part[0] not in ">/ \t\n":
-            return None  # another element named "si…"; let ET decide
-        if part[:gt].endswith("/"):  # <si/> → empty entry
-            sst.append("")
-            continue
-        end = part.find("</si>", gt)
-        if end < 0:
-            return None
-        sst.append(
-            "".join(_unescape(t) for t in _T_TEXT_RE.findall(part, gt, end))
-        )
-    return sst
+    return sst if len(sst) == text.count("<si") else None
 
 
 def load_shared_strings(stream) -> list[str]:

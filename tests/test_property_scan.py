@@ -170,8 +170,8 @@ def test_fast_walker_matches_et_walker(grid, shared_strings, tmp_path_factory):
     """Differential fuzz: the find-based fast walker and the ElementTree
     walker must emit identical (row, cells) streams for any fixture the
     writer can produce (sparse cells, unicode, entities, floats, bools,
-    raw CR/LF/tab); with shared strings, the fast and ElementTree
-    shared-strings loaders must build identical tables."""
+    raw CR/LF/tab); with shared strings, the fast shared-strings loader
+    must build the ElementTree loader's table or defer to it."""
     import io
 
     from data_to_parquet_spark.sources.xlsx import (
@@ -198,6 +198,11 @@ def test_fast_walker_matches_et_walker(grid, shared_strings, tmp_path_factory):
         if sst:
             sst_data = wb._zip.read("xl/sharedStrings.xml")
             assert _fast_path_eligible(sst_data)
-            assert load_shared_strings_fast(sst_data) == sst
+            # the fixture writes one escaped plain run per entry: the fast
+            # loader takes the part unless an escape (&, <, >) was needed
+            escaped = any(c in s for s in sst for c in "&<>")
+            assert load_shared_strings_fast(sst_data) == (
+                None if escaped else sst
+            )
             assert load_shared_strings(io.BytesIO(sst_data)) == sst
     assert fast == et

@@ -55,13 +55,16 @@ def test_fast_walker_normalizes_raw_carriage_returns_like_et():
     assert list(decode_rows(data, [], fast=True)) == expected
 
 
-def test_fast_walker_resolves_c1_references_like_et():
-    # XML keeps U+0080-U+009F; an HTML resolver would map them via cp1252
+def test_fast_walker_resolves_references_like_et():
+    # XML keeps U+0080-U+009F (an HTML resolver would map them via cp1252)
+    # and allows any number of leading zeros in a character reference
     data = _sheet(
         '<row r="1"><c r="A1" t="str"><v>&#133;</v></c>'
-        '<c r="B1" t="inlineStr"><is><t>&#x80;&lt;</t></is></c></row>'
+        '<c r="B1" t="inlineStr"><is><t>&#x80;&lt;</t></is></c>'
+        '<c r="C1" t="str"><v>&#00000065;&#x0000000042;</v></c>'
+        "</row>"
     )
-    expected = [(0, [(0, "\x85"), (1, "\x80<")])]
+    expected = [(0, [(0, "\x85"), (1, "\x80<"), (2, "AB")])]
     assert list(decode_rows(data, [], fast=False)) == expected
     assert list(decode_rows(data, [], fast=True)) == expected
 
@@ -83,11 +86,18 @@ def test_fast_walker_multi_run_edge_tags_match_et():
 
 # --- shared-strings loader ------------------------------------------------
 
-_SST_CASES = {
+# parts of one plain run per entry take the fast loader; anything else
+# (escapes, rich or phonetic runs, empty or self-closing elements, tag
+# whitespace) makes it return None, and the workbook loads it with ET
+_SST_FAST_CASES = {
     "plain": '<si><t>alpha</t></si><si><t xml:space="preserve"> b </t></si>',
+    "non_ascii": "<si><t>café ünïcødé 😀</t></si><si><t>ж</t></si>",
+    "crlf": '<si><t xml:space="preserve">one\r\ntwo\rthree\n</t></si>',
+}
+_SST_ET_CASES = {
     "entities": (
         "<si><t>a&amp;b&lt;c&gt;&quot;&apos;</t></si>"
-        "<si><t>x&#13;y&#x41;</t></si>"
+        "<si><t>x&#13;y&#x41;&#00000065;</t></si>"
     ),
     "c1_references": "<si><t>&#133;&#x80;&#x9F;&amp;</t></si>",
     "rich_runs": (
@@ -102,47 +112,47 @@ _SST_CASES = {
         '<si><t/></si><si><t xml:space="preserve"/></si><si/>'
         '<si><r><t xml:space="preserve"/></r><r><t>b</t></r></si>'
     ),
-    "non_ascii": "<si><t>café ünïcødé 😀</t></si><si><t>ж</t></si>",
-    "crlf": (
-        '<si><t xml:space="preserve">one\r\ntwo\rthree\n</t></si>'
-        "<si><r><t>a\r</t></r><r><t>\nb</t></r></si>"
-    ),
+    "crlf_rich": "<si><r><t>a\r</t></r><r><t>\nb</t></r></si>",
     "whitespace_in_tags": "<si ><t >a</t ></si><si>\n<t\n>b</t\n>\n</si>",
+    "end_tag_whitespace": "<si><t>a</t></si >",
+    "si_prefixed_element": "<si><t>a</t></si><sib/>",
 }
 
 
-@pytest.mark.parametrize("case", sorted(_SST_CASES))
+@pytest.mark.parametrize("case", sorted(_SST_FAST_CASES))
 def test_fast_sst_loader_matches_et(case):
-    data = _sst(_SST_CASES[case])
+    data = _sst(_SST_FAST_CASES[case])
     assert _fast_path_eligible(data)
     fast = load_shared_strings_fast(data)
     assert fast is not None
     assert fast == load_shared_strings(io.BytesIO(data))
 
 
-def test_fast_sst_loader_values():
+@pytest.mark.parametrize("case", sorted(_SST_ET_CASES))
+def test_fast_sst_loader_defers_other_entries_to_et(case, tmp_path):
+    data = _sst(_SST_ET_CASES[case])
+    assert _fast_path_eligible(data)
+    assert load_shared_strings_fast(data) is None
+    et = load_shared_strings(io.BytesIO(data))
+    with XlsxWorkbook(_workbook_with_sst(tmp_path, data)) as wb:
+        assert wb._shared_strings() == et
+
+
+def test_sst_loader_values():
     data = _sst(
-        "".join(_SST_CASES[k] for k in ("entities", "empty_runs", "crlf"))
+        _SST_FAST_CASES["crlf"] + '<si><t xml:space="preserve"/></si>'
+        + _SST_ET_CASES["entities"] + _SST_ET_CASES["crlf_rich"]
     )
-    assert load_shared_strings_fast(data) == [
-        "a&b<c>\"'",
-        "x\ryA",
-        "",
-        "",
-        "",
-        "b",
+    assert load_shared_strings(io.BytesIO(data)) == [
         "one\ntwo\nthree\n",
+        "",
+        "a&b<c>\"'",
+        "x\ryAA",
         "a\n\nb",
     ]
-
-
-def test_fast_sst_loader_defers_what_it_cannot_delimit():
-    # an end tag with whitespace, and an element whose name starts "si"
-    for items in ("<si><t>a</t></si >", "<si><t>a</t></si><sib/>"):
-        data = _sst(items)
-        assert _fast_path_eligible(data)
-        assert load_shared_strings_fast(data) is None, items
-        assert load_shared_strings(io.BytesIO(data)) == ["a"]
+    assert load_shared_strings_fast(_sst(_SST_FAST_CASES["crlf"])) == [
+        "one\ntwo\nthree\n"
+    ]
 
 
 def _workbook_with_sst(tmp_path, sst_part: bytes) -> str:
@@ -203,15 +213,15 @@ def test_ineligible_sst_parts_take_et(case, tmp_path, monkeypatch):
 
 
 def test_eligible_sst_part_takes_fast_loader(tmp_path, monkeypatch):
-    part = _sst(_SST_CASES["rich_runs"])
+    part = _sst(_SST_FAST_CASES["plain"])
     calls = _spy_fast(monkeypatch)
     with XlsxWorkbook(_workbook_with_sst(tmp_path, part)) as wb:
-        assert wb._shared_strings() == ["bold tail", "next"]
+        assert wb._shared_strings() == ["alpha", " b "]
     assert calls == [len(part)]
 
 
 def test_sst_part_above_buffer_limit_streams(tmp_path, monkeypatch):
-    part = _sst(_SST_CASES["plain"] + _SST_CASES["entities"])
+    part = _sst(_SST_FAST_CASES["plain"] + _SST_ET_CASES["entities"])
     path = _workbook_with_sst(tmp_path, part)
     monkeypatch.setattr(xlsx, "_FAST_BUFFER_LIMIT", len(part) - 1)
     calls = _spy_fast(monkeypatch)
@@ -223,6 +233,6 @@ def test_sst_part_above_buffer_limit_streams(tmp_path, monkeypatch):
         lambda self, name, pwd=None: read.append(name) or real_read(self, name, pwd),
     )
     with XlsxWorkbook(path) as wb:
-        assert wb._shared_strings() == ["alpha", " b ", "a&b<c>\"'", "x\ryA"]
+        assert wb._shared_strings() == ["alpha", " b ", "a&b<c>\"'", "x\ryAA"]
     assert calls == []
     assert "xl/sharedStrings.xml" not in read
