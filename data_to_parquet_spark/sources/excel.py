@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from ..errors import DataToParquetError
 from ..kernels import build_headers
-from .xlsx import _FAST_BUFFER_LIMIT, XlsxWorkbook, _fast_path_eligible, decode_rows
+from .xlsx import XlsxWorkbook, _fast_path_eligible, walk_buffer, walk_rows_fast
 
 __all__ = [
     "read_excel",
@@ -223,13 +223,15 @@ def read_file(
 
 
 class SheetSplit(NamedTuple):
-    """A single sheet part cut at ``<row`` boundaries into byte ranges."""
+    """A single strict-tier-eligible sheet part cut at ``<row`` boundaries
+    into byte ranges. Each range is decoded between the part's own head
+    ``[0, offsets[0])`` (through ``<sheetData …>``, with every namespace
+    declaration in scope for the rows) and tail ``[offsets[-1], end)``."""
 
     offsets: list[int]  # range i = [offsets[i], offsets[i + 1])
     start_col: int
     num_cols: int
     header_row_idx: int
-    fast: bool  # fast-path eligibility, proved over the whole part
 
 
 class ExcelScan(NamedTuple):
@@ -257,9 +259,9 @@ def plan_scan(
     With ``max_splits`` > 0, one ``.xlsx`` whose sheet part is at least
     ``SPLIT_THRESHOLD_BYTES`` and declares a dimension box is planned as
     a split: the part is inflated once, and that buffer feeds the header
-    scan, the explicit-``r`` check, the fast-path eligibility scan and the
-    split offsets. Split fragments never see the header row, so a caller
-    schema is validated against it here.
+    scan, the strict-tier eligibility scan, the explicit-``r`` check and
+    the split offsets. Split fragments never see the header row, so a
+    caller schema is validated against it here.
     """
     data = headers = None
     with open_workbook(paths[0]) as wb:
@@ -279,13 +281,8 @@ def plan_scan(
             if dims is not None:
                 data = wb._zip.read(member)
         if data is not None:
-            fast = _fast_path_eligible(data)
-            # past iter_rows_str's buffer cap the header scan streams too
-            rows = decode_rows(
-                data,
-                wb._shared_strings(),
-                fast=fast and len(data) <= _FAST_BUFFER_LIMIT,
-            )
+            # ElementTree parses only as far as the first data row
+            rows = walk_buffer(data, wb._shared_strings())
             header = _read_header(rows, dims, skip_rows)
             headers = header.names
         elif expected is None:
@@ -304,18 +301,23 @@ def plan_scan(
     if data is None:
         return ExcelScan(names, None, None)
 
-    # fragments re-number r-less rows from 0, which would corrupt the
-    # header-relative indexing — require explicit r attributes throughout
-    # (every mainstream writer emits them; stream otherwise)
+    # byte-offset cuts are sound only on a part the strict tier may take:
+    # no comment, CDATA or DTD can hide a "<row", and the part is UTF-8.
+    # Fragments re-number r-less rows from 0, which would corrupt the
+    # header-relative indexing, so every row start tag (every "<row"
+    # inside <sheetData>) must begin with an r attribute, as mainstream
+    # writers emit it. Any other part streams in one task.
     start = data.find(b"<sheetData")
     end = data.rfind(b"</sheetData>")
     body_start = data.find(b"<row", start)
     if (
-        data.count(b"<row ") != data.count(b"<row r=")
+        not _fast_path_eligible(data)
         or start < 0
         or end < 0
         or body_start < 0
         or body_start > end
+        or data.count(b"<row", body_start, end)
+        != data.count(b"<row r=", body_start, end)
     ):
         return ExcelScan(names, None, None)
     approx = max(1, (end - body_start) // max_splits)
@@ -326,9 +328,7 @@ def plan_scan(
             break
         offsets.append(nxt)
     offsets.append(end)
-    split = SheetSplit(
-        offsets, header.start_col, header.num_cols, header.row_idx, fast
-    )
+    split = SheetSplit(offsets, header.start_col, header.num_cols, header.row_idx)
     return ExcelScan(names, split, data)
 
 
@@ -418,11 +418,14 @@ def _split_frame(
     """Parallelize ONE large .xlsx across tasks, one per planned byte range.
 
     The deflate stream itself can't be range-read, so the planner's one
-    inflate of the sheet part is written to a scratch file, and each task
-    reads its range of whole ``<row>`` elements, wraps it in a synthetic
-    root and decodes it through :func:`.xlsx.decode_rows` (namespace-free
-    fragments) — the streaming path's decoders and densify helper.
-    ``test_split_path_equivalence`` pins the two paths to the same rows.
+    inflate of the sheet part is written to a scratch file. Each task reads
+    its range of whole ``<row>`` elements and wraps it in the part's own
+    head and tail (see :class:`SheetSplit`), so every namespace declaration
+    in scope for the rows comes along; the result is an eligible part of
+    fewer rows, which :func:`.xlsx.walk_rows_fast` decodes (handing off to
+    ElementTree at a row the strict tier cannot tile) into the streaming
+    path's densify helper. ``test_split_path_equivalence`` and the
+    Excel-style split tests pin the two paths to the same rows.
     """
     import atexit
     import tempfile
@@ -436,6 +439,7 @@ def _split_frame(
     scratch_path = scratch.name
     atexit.register(lambda: os.path.exists(scratch_path) and os.remove(scratch_path))
     names = schema.fieldNames()
+    head_end, tail_start = split.offsets[0], split.offsets[-1]
 
     def frag_reader(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sst: list[str] | None = None
@@ -445,11 +449,12 @@ def _split_frame(
                     with XlsxWorkbook(path) as wb:
                         sst = wb._shared_strings()
                 with open(scratch_path, "rb") as f:
+                    head = f.read(head_end)
                     f.seek(lo)
                     frag = f.read(hi - lo)
-                rows = decode_rows(
-                    b"<sheetData>" + frag + b"</sheetData>", sst, "", split.fast
-                )
+                    f.seek(tail_start)
+                    tail = f.read()
+                rows = walk_rows_fast(head + frag + tail, sst)
                 # leading rows + header row were planned on the driver
                 data_rows = (r for r in rows if r[0] > split.header_row_idx)
                 yield from _record_batches(

@@ -8,12 +8,18 @@ present but valueless cells are emitted as Empty (→ ``""`` downstream, while
 absent cells densify to NULL — the reference's critical null-vs-empty-string
 distinction, ``src/lib.rs:398`` vs ``:428-433``).
 
+Sheet parts decode on one of two tiers: the strict tokenizer
+(:func:`walk_rows_fast`) for the cell shapes machine writers emit, and
+ElementTree (:func:`walk_rows`), the reference for everything else. At the
+first row the strict tier cannot decode it hands the rest of the part to
+ElementTree. Both tiers stringify a cell through :func:`_cell_text`.
+
 Memory profile: ``ElementTree.iterparse`` with element eviction keeps only one
 ``<row>`` subtree resident; the shared-strings table is loaded up front (as
 calamine also does). That bounds per-task memory at O(row + sst), which is the
 same bound the reference claims (``README.md:9``). Exception: sheet parts and
-shared-strings parts up to ``_FAST_BUFFER_LIMIT`` take the find-based fast
-path, which buffers the whole (inflated) part — per-task memory is then
+shared-strings parts up to ``_FAST_BUFFER_LIMIT`` are inflated into memory
+for the strict tier — per-task memory is then
 O(min(sheet, limit) + min(sst part, limit) + sst); larger parts are streamed
 through ``iterparse``.
 """
@@ -21,6 +27,7 @@ through ``iterparse``.
 from __future__ import annotations
 
 import io
+import itertools
 import re
 import zipfile
 from typing import Iterator
@@ -28,6 +35,7 @@ from xml.etree import ElementTree as ET
 
 from ..errors import DataToParquetError
 from ..kernels import _ERROR_TOKENS as _XLSX_ERR_TOKENS
+from ..kernels import format_float
 
 __all__ = ["XlsxWorkbook", "ZipWorkbook", "parse_cell_ref", "parse_dimension"]
 
@@ -38,22 +46,69 @@ _REL_NS = (
 _PKG_REL_NS = (
     "{http://schemas.openxmlformats.org/package/2006/relationships}"
 )
+_T, _R = f"{_MAIN_NS}t", f"{_MAIN_NS}r"
 
 _CELL_REF_RE = re.compile(r"^([A-Z]+)(\d+)$")
 
 
-def walk_rows(stream, ns: str, sst: list[str]):
-    """Row-subtree walker over SpreadsheetML ``<row>`` elements: yields
-    (row_idx, [(col, normalized_string), ...]) per physically-present row.
+def _cell_text(
+    t: str | None, v: str | None, sst: list[str], format_float
+) -> str:
+    """A cell's ``t=`` type and ``<v>`` text → its normalized string
+    (``src/lib.rs:387-400``); a missing or empty ``<v>`` is a
+    present-but-empty cell."""
+    if not v:
+        return ""
+    if t is None or t == "n":
+        # int fast path (calamine parses i64 first, f64 fallback)
+        digits = v[1:] if v[0] == "-" else v
+        if digits.isdigit():
+            # canonical form passes through untouched; "007"/"-0"
+            # renormalize via int()
+            if (
+                len(digits) <= 18
+                and (digits == "0" or digits[0] != "0")
+                and v != "-0"
+            ):
+                return v
+            iv = int(v)
+            if -(2**63) <= iv < 2**63:
+                return str(iv)
+            # beyond i64 → f64 like calamine
+        try:
+            return format_float(float(v))
+        except ValueError:
+            return v
+    if t == "s":
+        try:
+            return sst[int(v)]
+        except (ValueError, IndexError):
+            return v
+    if t == "b":
+        return "false" if v in ("0", "false", "FALSE") else "true"
+    if t == "e":
+        return _XLSX_ERR_TOKENS.get(v, v)
+    return v  # "str", "d", unknown -> literal text
 
-    ``ns`` is the element-namespace prefix (``{...spreadsheetml...}`` for a
-    full worksheet part, ``""`` for re-parsed XML fragments that lost the
-    default-namespace declaration — see excel.py's large-file split path).
-    """
-    from ..kernels import format_float
 
-    ROW, C, V, IS = f"{ns}row", f"{ns}c", f"{ns}v", f"{ns}is"
-    err_tokens = _XLSX_ERR_TOKENS
+def _rst_text(el) -> str:
+    """Text of a rich-text element (``<si>``, ``<is>``): its direct
+    ``<t>`` plus the ``<t>`` of each ``<r>`` run. Phonetic ``<rPh>`` runs
+    are skipped, as Excel displays the text, calamine's ``read_string``
+    reads it and the xlsb reader decodes it."""
+    return "".join(
+        t.text or ""
+        for run in el
+        if run.tag == _T or run.tag == _R
+        for t in run.iter(_T)
+    )
+
+
+def walk_rows(stream, sst: list[str]):
+    """ElementTree row walker over a SpreadsheetML sheet part: yields
+    (row_idx, [(col, normalized_string), ...]) per physically-present
+    ``<row>``, keeping one row subtree resident."""
+    ROW, C, V, IS = (f"{_MAIN_NS}{tag}" for tag in ("row", "c", "v", "is"))
     row_counter = -1
     for _, el in ET.iterparse(stream):  # end events only
         if el.tag != ROW:
@@ -77,89 +132,55 @@ def walk_rows(stream, ns: str, sst: list[str]):
                 col = acc - 1
             else:
                 col += 1
-            # decode cell to its normalized string
-            t = c.get("t")
-            v = None
-            is_el = None
+            # the first direct <v> or <is> child wins
+            text = ""
             for child in c:
-                tag = child.tag
-                if tag == V:
-                    v = child.text
+                if child.tag == V:
+                    text = _cell_text(c.get("t"), child.text, sst, format_float)
                     break
-                if tag == IS:
-                    is_el = child
+                if child.tag == IS:
+                    text = _rst_text(child)
                     break
-            if is_el is not None:
-                out.append((col, "".join(tt.text or "" for tt in is_el.iter(f"{ns}t"))))
-                continue
-            if v is None:
-                out.append((col, ""))  # present-but-empty -> ""
-                continue
-            if t is None or t == "n":
-                # int fast path (calamine parses i64 first, f64 fallback)
-                digits = v[1:] if v[0] == "-" else v
-                if digits.isdigit():
-                    # canonical form passes through untouched; "007"/"-0"
-                    # renormalize via int()
-                    if (
-                        len(digits) <= 18
-                        and (digits == "0" or digits[0] != "0")
-                        and v != "-0"
-                    ):
-                        out.append((col, v))
-                        continue
-                    iv = int(v)
-                    if -(2**63) <= iv < 2**63:
-                        out.append((col, str(iv)))
-                        continue
-                    # beyond i64 → f64 like calamine
-                try:
-                    out.append((col, format_float(float(v))))
-                except ValueError:
-                    out.append((col, v))
-            elif t == "s":
-                try:
-                    out.append((col, sst[int(v)]))
-                except (ValueError, IndexError):
-                    out.append((col, v))
-            elif t == "b":
-                out.append(
-                    (col, "false" if v in ("0", "false", "FALSE") else "true")
-                )
-            elif t == "e":
-                out.append((col, err_tokens.get(v, v)))
-            else:  # "str", "d", unknown -> literal text
-                out.append((col, v))
+            out.append((col, text))
         yield row_counter, out
         el.clear()
 
 
-# --- regex fast path -------------------------------------------------------
+def walk_buffer(data: bytes, sst: list[str]):
+    """:func:`walk_rows` over an in-memory part. An abandoned iterparse is
+    a reference cycle that only a garbage collection frees, so the stream
+    is closed on exit to let go of ``data`` even when the rows are not
+    drained."""
+    with io.BytesIO(data) as stream:
+        yield from walk_rows(stream, sst)
+
+
+# --- strict tier -----------------------------------------------------------
 # SpreadsheetML from real producers (Excel, openpyxl, this repo's fixture
 # writer) declares the main namespace as the DEFAULT namespace and never by
-# prefix, never uses CDATA/comments/PIs inside sheet parts, and is UTF-8.
-# Under those conditions (cheaply verified over the whole buffer up front),
-# <row>/<c>/<v>/<is> elements can be located with string finds + small
-# regexes — ~2.5× faster than ElementTree iterparse. Anything unusual
-# disqualifies the buffer and the ET walker runs instead, so the fast path
-# can never be silently wrong: it either proves its preconditions or defers.
+# prefix, never uses CDATA/comments/PIs/DTDs inside sheet parts, and is
+# UTF-8. Under those conditions (cheaply verified over the whole buffer up
+# front) every "<row" in the text starts a row (or a <rowBreaks>), so rows
+# can be located with string finds and their bodies tokenized with one
+# regex — ~2.5× faster than ElementTree iterparse. A row the tokenizer
+# cannot prove hands the rest of the part to ElementTree, so the tier is
+# never silently wrong.
 
-# Per-part inflate-to-memory bound for the fast path. Deliberately small:
+# Per-part inflate-to-memory bound for the strict tier. Deliberately small:
 # with one task per workbook, every concurrent task may hold, for the sheet
 # part, buffer + decoded text (~3× this) and, for the shared-strings part,
 # buffer + decoded text (+ an end-of-line copy when it holds a raw CR) next
 # to the table itself (~3× this again) at once, so the cap — not O(row)
-# streaming — becomes the per-task memory bound whenever the fast path
+# streaming — becomes the per-task memory bound whenever the strict tier
 # engages. Parts above the cap stream through ElementTree (sheets may also
 # take the XML-split path for single large files).
 _FAST_BUFFER_LIMIT = 32 * 1024 * 1024
 _MAIN_NS_URI = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-_XMLNS_PREFIX_RE = re.compile(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"')
+# any prefixed namespace declaration, whatever its prefix characters,
+# spacing or quotes
+_XMLNS_PREFIX_RE = re.compile(rb'xmlns:[^\s=]+\s*=\s*(["\'])(.*?)\1')
 _ROW_TAIL = " />\t\r\n"
 _ROW_R_RE = re.compile(r'\br="(\d+)"')
-# a ``<t>`` run and its text; the lookbehind keeps a self-closing
-# ``<t .../>`` (empty run) from pairing with the next run's ``</t>``
-_T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?(?<!/)>(.*?)</t\s*>", re.S)
 #: Shared-string entry as machine writers emit it: one plain ``<t>`` run
 #: without escapes. Accepted only when every ``<si`` in the part matched.
 _SI_RE = re.compile(r'<si><t(?: xml:space="preserve")?>([^<&]*)</t></si>')
@@ -167,23 +188,23 @@ _SI_RE = re.compile(r'<si><t(?: xml:space="preserve")?>([^<&]*)</t></si>')
 
 def _fast_path_eligible(data: bytes) -> bool:
     # the sheet must actually live in the SpreadsheetML main namespace as
-    # the DEFAULT namespace — otherwise the fast walker would "parse" rows
+    # the DEFAULT namespace — otherwise the strict tier would "parse" rows
     # the namespace-keyed ET walker would (correctly) not recognize at all
     if data.find(b'xmlns="' + _MAIN_NS_URI.encode() + b'"') == -1:
         return False
-    if data.find(b"<![CDATA[") != -1 or data.find(b"<!--") != -1:
+    if data.find(b"<!") != -1:  # comment, CDATA section or DTD
         return False
     if data.find(b"<?", 1) != -1:  # any PI beyond the leading XML decl
         return False
     if data.find(b"<extLst") != -1:
-        # extension lists may nest arbitrary elements inside <c>, which the
-        # find-based cell splitter assumes cannot happen
+        # extension lists may carry elements of any namespace, so a "<row"
+        # inside one need not be a worksheet row
         return False
     head = data[:200]
     if b"encoding" in head and b"UTF-8" not in head and b"utf-8" not in head:
         return False
     for m in _XMLNS_PREFIX_RE.finditer(data):
-        if m.group(1) == _MAIN_NS_URI.encode():
+        if m.group(2) == _MAIN_NS_URI.encode():
             return False  # prefixed main-ns elements are possible → defer
     return True
 
@@ -191,39 +212,11 @@ def _fast_path_eligible(data: bytes) -> bool:
 def _eol(text: str) -> str:
     """XML 1.0 end-of-line handling (section 2.11), which ElementTree
     applies while parsing: ``\r\n`` and a lone ``\r`` become ``\n``.
-    A ``&#13;`` reference is not affected; :func:`_unescape` resolves it
-    to ``\r`` afterwards, as ElementTree does."""
+    A ``&#13;`` reference stays ``\r``; the strict tier refuses text with
+    references, so ElementTree resolves it."""
     if "\r" in text:
         return text.replace("\r\n", "\n").replace("\r", "\n")
     return text
-
-
-# valid XML text holds only the five predefined entities and numeric
-# character references; html.unescape is not a substitute, because it maps
-# references to U+0080-U+009F through cp1252 where XML keeps the code point
-_XML_REF_RE = re.compile(
-    r"&(?:#x([0-9a-fA-F]+)|#([0-9]+)|(amp|lt|gt|quot|apos));"
-)
-_XML_ENTITIES = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
-
-
-def _xml_ref(m: re.Match) -> str:
-    hex_digits, dec_digits, name = m.groups()
-    if name:
-        return _XML_ENTITIES[name]
-    # leading zeros are allowed; more than 7 significant digits is past
-    # U+10FFFF in either base (and keeps int() off huge decimal strings)
-    digits = (hex_digits or dec_digits).lstrip("0") or "0"
-    if len(digits) > 7:
-        return m.group()
-    cp = int(digits, 16 if hex_digits else 10)
-    return chr(cp) if cp <= 0x10FFFF else m.group()
-
-
-def _unescape(s: str) -> str:
-    if "&" in s:
-        return _XML_REF_RE.sub(_xml_ref, s)
-    return s
 
 
 #: Strict single-pass cell tokenizer for the three machine-written cell
@@ -235,9 +228,9 @@ def _unescape(s: str) -> str:
 #: ``s=``). Styles never affect the decoded text, so ``s`` is skipped. A
 #: row parses on this tier ONLY when consecutive matches tile its entire
 #: body (checked below) — any other attribute, attribute order, escape,
-#: or element form leaves a gap and the row falls back to the generic
-#: find-based decoder, so this tier can never be silently wrong: per cell
-#: it either proves one of the three shapes or defers.
+#: child element or element form leaves a gap, and ElementTree decodes
+#: that row and the rest of the part. Per cell the tier either proves one
+#: of the three shapes or defers.
 _STRICT_CELL_RE = re.compile(
     r'<c r="([A-Z]{1,3})\d*"(?: s="\d+")?(?: t="([a-zA-Z]+)")?'
     r'(?:/>'
@@ -250,11 +243,9 @@ def _decode_strict_cells(
     body: str, sst: list[str], format_float
 ) -> list[tuple[int, str]] | None:
     """Decode a ``<row>`` body via :data:`_STRICT_CELL_RE`; None when the
-    matches do not tile the body exactly (caller falls back). The decode
-    branches mirror the generic walker's t-dispatch verbatim."""
+    matches do not tile the body exactly."""
     out: list[tuple[int, str]] = []
     pos = 0
-    err_tokens = _XLSX_ERR_TOKENS
     for m in _STRICT_CELL_RE.finditer(body):
         if m.start() != pos:
             return None
@@ -263,211 +254,59 @@ def _decode_strict_cells(
         acc = 0
         for ch in letters:
             acc = acc * 26 + (ord(ch) - 64)
-        col = acc - 1
-        if istext is not None:
-            out.append((col, istext))
-            continue
-        if not v:  # self-closing or empty <v> → present-but-empty
-            out.append((col, ""))
-            continue
-        if t is None or t == "n":
-            digits = v[1:] if v[0] == "-" else v
-            if digits.isdigit():
-                if (
-                    len(digits) <= 18
-                    and (digits == "0" or digits[0] != "0")
-                    and v != "-0"
-                ):
-                    out.append((col, v))
-                    continue
-                iv = int(v)
-                if -(2**63) <= iv < 2**63:
-                    out.append((col, str(iv)))
-                    continue
-            try:
-                out.append((col, format_float(float(v))))
-            except ValueError:
-                out.append((col, v))
-        elif t == "s":
-            try:
-                out.append((col, sst[int(v)]))
-            except (ValueError, IndexError):
-                out.append((col, v))
-        elif t == "b":
-            out.append(
-                (col, "false" if v in ("0", "false", "FALSE") else "true")
-            )
-        elif t == "e":
-            out.append((col, err_tokens.get(v, v)))
-        else:  # "str", "d", unknown → literal text
-            out.append((col, v))
-    if pos != len(body):
-        return None
-    return out
+        out.append(
+            (acc - 1, _cell_text(t, v, sst, format_float) if istext is None else istext)
+        )
+    return out if pos == len(body) else None
 
 
 def walk_rows_fast(data: bytes, sst: list[str]):
-    """Regex row walker over a whole sheet-part buffer. Same contract as
-    :func:`walk_rows`; only called when ``_fast_path_eligible`` proved the
-    preconditions. Returns None (pre-iteration) if decoding fails."""
-    from ..kernels import format_float
-
+    """Strict-tier row walker over a whole sheet-part buffer, with
+    :func:`walk_rows`' contract; only called when :func:`_fast_path_eligible`
+    proved the preconditions. At the first row the strict tier cannot
+    tile, :func:`walk_buffer` decodes the buffer from the start and the
+    rows already yielded (self-closing ones included) are skipped; a
+    buffer that is not UTF-8 goes to :func:`walk_buffer` whole."""
     try:
         text = _eol(data.decode("utf-8"))
     except UnicodeDecodeError:
-        return None
-    err_tokens = _XLSX_ERR_TOKENS
-
-    def rows():
-        pos = 0
-        row_counter = -1
-        n = len(text)
-        while True:
-            i = text.find("<row", pos)
-            if i < 0:
-                return
-            tail = i + 4
-            if tail < n and text[tail] not in _ROW_TAIL:
-                pos = tail  # e.g. <rowBreaks>
-                continue
-            j = text.find(">", i)
-            if j < 0:
-                return
-            head = text[i:j]
-            m = _ROW_R_RE.search(head)
-            row_counter = int(m.group(1)) - 1 if m else row_counter + 1
-            if text[j - 1] == "/":  # self-closing: physically-present, empty
-                yield row_counter, []
-                pos = j + 1
-                continue
+        yield from walk_buffer(data, sst)
+        return
+    n = len(text)
+    pos = done = 0
+    row_counter = -1
+    while True:
+        i = text.find("<row", pos)
+        if i < 0:
+            return
+        tail = i + 4
+        if tail < n and text[tail] not in _ROW_TAIL:
+            pos = tail  # e.g. <rowBreaks>
+            continue
+        j = text.find(">", i)
+        if j < 0:
+            break
+        if text[j - 1] == "/":  # self-closing: physically-present, empty
+            cells = []
+            pos = j + 1
+        else:
             k = text.find("</row>", j)
             if k < 0:
-                return
-            body = text[j + 1 : k]
-            strict = _decode_strict_cells(body, sst, format_float)
-            if strict is not None:
-                yield row_counter, strict
-                pos = k + 6
-                continue
-            out: list[tuple[int, str]] = []
-            col = -1
-            # inside <row>, schema-valid children are only <c> (extLst is
-            # excluded by eligibility), so splitting on "<c" isolates cells;
-            # all parsing below is C-speed str.find/slice, no regex
-            for part in body.split("<c")[1:]:
-                gt = part.find(">")
-                attrs = part[:gt]
-                ri = attrs.find(' r="')
-                if ri != -1:
-                    # identical arithmetic to walk_rows' manual A1 parse
-                    acc = 0
-                    for ch in attrs[ri + 4 : attrs.index('"', ri + 4)]:
-                        o = ord(ch)
-                        if o < 65 or o > 90:
-                            break
-                        acc = acc * 26 + (o - 64)
-                    col = acc - 1
-                else:
-                    col += 1
-                if attrs.endswith("/"):  # self-closing <c/> → present-empty
-                    out.append((col, ""))
-                    continue
-                content = part[gt + 1 :]
-                # ET semantics: first direct v/is child wins
-                vpos = content.find("<v")
-                ipos = content.find("<is")
-                if ipos != -1 and (vpos == -1 or ipos < vpos):
-                    # single-run fast case: exactly one <t>…</t>
-                    tpos = content.find("<t", ipos + 3)
-                    if tpos != -1 and content[tpos + 2] in " >/":
-                        tgt = content.find(">", tpos)
-                        if tgt != -1 and content[tgt - 1] != "/":
-                            tend = content.find("</t>", tgt)
-                            if (
-                                tend != -1
-                                and content.find("<", tgt, tend) == -1
-                                and content.find("<t", tend + 4) == -1
-                            ):
-                                out.append(
-                                    (col, _unescape(content[tgt + 1 : tend]))
-                                )
-                                continue
-                    out.append(
-                        (
-                            col,
-                            "".join(
-                                _unescape(t)
-                                for t in _T_TEXT_RE.findall(content[ipos:])
-                            ),
-                        )
-                    )
-                    continue
-                v = None
-                if vpos != -1:
-                    vgt = content.find(">", vpos)
-                    if vgt != -1 and content[vgt - 1] != "/":
-                        vend = content.find("</v>", vgt)
-                        if vend != -1:
-                            v = _unescape(content[vgt + 1 : vend])
-                if not v:  # absent or empty <v> → present-but-empty
-                    out.append((col, ""))
-                    continue
-                ti = attrs.find(' t="')
-                t = (
-                    attrs[ti + 4 : attrs.index('"', ti + 4)]
-                    if ti != -1
-                    else None
-                )
-                if t is None or t == "n":
-                    digits = v[1:] if v[0] == "-" else v
-                    if digits.isdigit():
-                        if (
-                            len(digits) <= 18
-                            and (digits == "0" or digits[0] != "0")
-                            and v != "-0"
-                        ):
-                            out.append((col, v))
-                            continue
-                        iv = int(v)
-                        if -(2**63) <= iv < 2**63:
-                            out.append((col, str(iv)))
-                            continue
-                    try:
-                        out.append((col, format_float(float(v))))
-                    except ValueError:
-                        out.append((col, v))
-                elif t == "s":
-                    try:
-                        out.append((col, sst[int(v)]))
-                    except (ValueError, IndexError):
-                        out.append((col, v))
-                elif t == "b":
-                    out.append(
-                        (col, "false" if v in ("0", "false", "FALSE") else "true")
-                    )
-                elif t == "e":
-                    out.append((col, err_tokens.get(v, v)))
-                else:  # "str", "d", unknown → literal text
-                    out.append((col, v))
-            yield row_counter, out
+                break
+            cells = _decode_strict_cells(text[j + 1 : k], sst, format_float)
+            if cells is None:
+                break
             pos = k + 6
-
-    return rows()
-
-
-def decode_rows(data: bytes, sst: list[str], ns: str = _MAIN_NS, fast=None):
-    """The one decoder choice for an in-memory sheet buffer:
-    :func:`walk_rows_fast` when ``fast`` (default: the buffer's own
-    :func:`_fast_path_eligible` verdict) holds and the text decodes, else
-    :func:`walk_rows` under element prefix ``ns``."""
-    if fast is None:
-        fast = _fast_path_eligible(data)
-    rows = walk_rows_fast(data, sst) if fast else None
-    return rows if rows is not None else walk_rows(io.BytesIO(data), ns, sst)
+        m = _ROW_R_RE.search(text, i, j)
+        row_counter = int(m.group(1)) - 1 if m else row_counter + 1
+        yield row_counter, cells
+        done += 1
+    # a row the strict tier cannot tile (or a truncated one)
+    yield from itertools.islice(walk_buffer(data, sst), done, None)
 
 
 def load_shared_strings_fast(data: bytes) -> list[str] | None:
-    """Find-based shared-strings loader over a whole ``sharedStrings.xml``
+    """One-regex shared-strings loader over a whole ``sharedStrings.xml``
     buffer; only called when ``_fast_path_eligible`` proved the
     preconditions. Same result as :func:`load_shared_strings` when every
     entry is one plain ``<t>`` run without escapes (the shape machine
@@ -487,11 +326,11 @@ def load_shared_strings_fast(data: bytes) -> list[str] | None:
 
 def load_shared_strings(stream) -> list[str]:
     """ElementTree shared-strings loader: streams ``<si>`` entries with
-    element eviction, each the text of all its ``<t>`` descendants."""
+    element eviction, each through :func:`_rst_text`."""
     sst: list[str] = []
     for _, el in ET.iterparse(stream):
         if el.tag == f"{_MAIN_NS}si":
-            sst.append("".join(t.text or "" for t in el.iter(f"{_MAIN_NS}t")))
+            sst.append(_rst_text(el))
             el.clear()
     return sst
 
@@ -656,15 +495,20 @@ class XlsxWorkbook(ZipWorkbook):
         reference stringify rules (``src/lib.rs:387-400``).
 
         Sheet parts up to ``_FAST_BUFFER_LIMIT`` are inflated into memory
-        and go through :func:`decode_rows`; larger ones stream through
+        and decode on the strict tier (:func:`walk_rows_fast`) when
+        eligible, else on :func:`walk_rows`; larger ones stream through
         :func:`walk_rows` (one ``<row>`` subtree resident at a time).
         ``tests/test_excel_source.py::test_fast_and_et_walkers_agree`` and
-        the property scan pin the two decoders to the same output.
+        the property scan pin the two tiers to the same output.
         """
         sst = self._shared_strings()
         member = self.sheet_member(sheet)
-        if self._zip.getinfo(member).file_size <= _FAST_BUFFER_LIMIT:
-            yield from decode_rows(self._zip.read(member), sst)
+        if self._zip.getinfo(member).file_size > _FAST_BUFFER_LIMIT:
+            with self._zip.open(member) as f:
+                yield from walk_rows(f, sst)
             return
-        with self._zip.open(member) as f:
-            yield from walk_rows(f, _MAIN_NS, sst)
+        data = self._zip.read(member)
+        if _fast_path_eligible(data):
+            yield from walk_rows_fast(data, sst)
+        else:
+            yield from walk_buffer(data, sst)

@@ -393,6 +393,118 @@ def test_split_path_order_preservation(spark, tmp_path, monkeypatch):
     assert seqs == list(range(n))
 
 
+def _split_fixture(path: str, n: int, edit):
+    """An ``n``-row shared-strings workbook (columns a, b, c) whose sheet
+    part text went through ``edit``; returns the expected rows."""
+    import zipfile
+
+    from data_to_parquet_spark.kernels import format_float
+
+    src = path + ".src.xlsx"
+    write_xlsx(
+        src,
+        {"S": [["a", "b", "c"]] + [[i, f"v{i}", i * 0.5] for i in range(n)]},
+        shared_strings=True,
+    )
+    with zipfile.ZipFile(src) as zin, zipfile.ZipFile(
+        path, "w", zipfile.ZIP_DEFLATED
+    ) as zout:
+        for info in zin.infolist():
+            body = zin.read(info)
+            if info.filename.startswith("xl/worksheets/"):
+                body = edit(body.decode()).encode()
+            zout.writestr(info.filename, body)
+    return [(str(i), f"v{i}", format_float(i * 0.5)) for i in range(n)]
+
+
+def _excel_style_xlsx(path: str, n: int, *, ext_lst: bool, formula_row=None):
+    """A sheet part shaped like Excel's own output: the x14ac namespace
+    declared on the root and used by an ``x14ac:dyDescent`` attribute on
+    every row, optionally a trailing ``<extLst>`` and one ``<f>`` formula
+    cell. Returns the expected rows."""
+    import re
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    x14ac = "http://schemas.microsoft.com/office/spreadsheetml/2009/9/ac"
+
+    def edit(xml: str) -> str:
+        xml = xml.replace(
+            f'<worksheet xmlns="{ns}">',
+            f'<worksheet xmlns="{ns}" xmlns:mc="http://schemas.'
+            'openxmlformats.org/markup-compatibility/2006" '
+            f'mc:Ignorable="x14ac" xmlns:x14ac="{x14ac}">',
+        )
+        xml = re.sub(
+            r'<row r="(\d+)">',
+            r'<row r="\1" spans="1:3" x14ac:dyDescent="0.25">',
+            xml,
+        )
+        if formula_row is not None:
+            cell = f'<c r="A{formula_row}"><v>'
+            assert cell in xml
+            xml = xml.replace(cell, f'<c r="A{formula_row}"><f>ROW()-2</f><v>')
+        if ext_lst:
+            xml = xml.replace(
+                "</worksheet>",
+                '<extLst><ext uri="{78C0D931-6437-407d-A8EE-F0AAD7539E65}" '
+                'xmlns:x14="http://schemas.microsoft.com/office/'
+                'spreadsheetml/2009/9/main"><x14:conditionalFormattings/>'
+                "</ext></extLst></worksheet>",
+            )
+        return xml
+
+    return _split_fixture(path, n, edit)
+
+
+def test_split_of_excel_style_sheet_with_ext_lst(spark, tmp_path, monkeypatch):
+    """A part with an ``<extLst>`` is not split-eligible: it streams in one
+    task, whose decode resolves the rows' ``x14ac:`` attribute prefix."""
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    path = str(tmp_path / "excel_style_ext.xlsx")
+    expected = _excel_style_xlsx(path, 3000, ext_lst=True)
+    streamed = _rows(read_excel(spark, path))
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    df = read_excel(spark, path)
+    assert df.rdd.getNumPartitions() == 1
+    assert _rows(df) == streamed == expected
+
+
+def test_split_of_excel_style_sheet_hands_off_inside_fragment(
+    spark, tmp_path, monkeypatch
+):
+    """Without an ``<extLst>`` the part splits; the fragment holding the
+    formula row hands off to ElementTree, which must see the root's
+    ``xmlns:x14ac`` declaration to parse the rows' prefixed attribute."""
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    path = str(tmp_path / "excel_style_formula.xlsx")
+    expected = _excel_style_xlsx(path, 3000, ext_lst=False, formula_row=1502)
+    streamed = _rows(read_excel(spark, path))
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    df = read_excel(spark, path)
+    assert df.rdd.getNumPartitions() > 1  # split path engaged
+    assert _rows(df) == streamed == expected
+
+
+def test_split_refuses_rows_without_r(spark, tmp_path, monkeypatch):
+    """Rows after the header carry no r attribute (a bare ``<row>``): a
+    fragment would number its rows from 0, so the part streams in one
+    task, which numbers them from the header."""
+    import re
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    path = str(tmp_path / "r_less_rows.xlsx")
+    expected = _split_fixture(
+        path, 3000, lambda xml: re.sub(r'<row r="(?!1")\d+">', "<row>", xml)
+    )
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    df = read_excel(spark, path)
+    assert df.rdd.getNumPartitions() == 1
+    assert _rows(df) == expected
+
+
 def test_duplicate_header_names_survive(spark, tmp_path):
     """`a, a_2, a` -> columns [a, a_2, a_2] (reference naming collision) —
     values must stay positionally aligned, not collapse."""
@@ -441,13 +553,12 @@ def test_mismatched_multi_file_headers_rejected(spark, tmp_path):
 
 
 def test_fast_and_et_walkers_agree(tmp_path):
-    """The find-based fast walker and the ElementTree fallback must produce
-    identical streams (the fast path is only ever an optimization)."""
+    """The strict-tier walker and the ElementTree walker must produce
+    identical streams (the strict tier is only ever an optimization)."""
     import io
 
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
-        _MAIN_NS,
         _fast_path_eligible,
         walk_rows,
         walk_rows_fast,
@@ -471,7 +582,7 @@ def test_fast_and_et_walkers_agree(tmp_path):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        et = list(walk_rows(io.BytesIO(data), _MAIN_NS, sst))
+        et = list(walk_rows(io.BytesIO(data), sst))
     assert fast == et
     assert len(fast) == 5
 

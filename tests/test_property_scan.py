@@ -167,16 +167,16 @@ _walker_grid = st.lists(
 @settings(max_examples=40, deadline=None)
 @given(grid=_walker_grid, shared_strings=st.booleans())
 def test_fast_walker_matches_et_walker(grid, shared_strings, tmp_path_factory):
-    """Differential fuzz: the find-based fast walker and the ElementTree
-    walker must emit identical (row, cells) streams for any fixture the
-    writer can produce (sparse cells, unicode, entities, floats, bools,
-    raw CR/LF/tab); with shared strings, the fast shared-strings loader
-    must build the ElementTree loader's table or defer to it."""
+    """Differential fuzz: the strict-tier walker (with its ElementTree
+    handoff) and the ElementTree walker must emit identical (row, cells)
+    streams for any fixture the writer can produce (sparse cells,
+    unicode, entities, floats, bools, raw CR/LF/tab); with shared
+    strings, the fast shared-strings loader must build the ElementTree
+    loader's table or defer to it."""
     import io
 
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
-        _MAIN_NS,
         _fast_path_eligible,
         load_shared_strings,
         load_shared_strings_fast,
@@ -194,7 +194,7 @@ def test_fast_walker_matches_et_walker(grid, shared_strings, tmp_path_factory):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        et = list(walk_rows(io.BytesIO(data), _MAIN_NS, sst))
+        et = list(walk_rows(io.BytesIO(data), sst))
         if sst:
             sst_data = wb._zip.read("xl/sharedStrings.xml")
             assert _fast_path_eligible(sst_data)

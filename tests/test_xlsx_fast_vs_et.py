@@ -1,7 +1,9 @@
-"""Differential tests: the find-based fast paths of ``sources/xlsx.py``
-(``walk_rows_fast`` for sheet parts, ``load_shared_strings_fast`` for the
-shared-strings part) must return exactly what the ElementTree paths
-return, and parts whose preconditions do not hold must take ElementTree.
+"""Differential tests: the fast paths of ``sources/xlsx.py``
+(``walk_rows_fast`` for sheet parts, with its handoff to ElementTree at
+the first row the strict tier cannot tile, and ``load_shared_strings_fast``
+for the shared-strings part) must return exactly what the ElementTree
+paths return, and parts whose preconditions do not hold must take
+ElementTree.
 """
 
 from __future__ import annotations
@@ -15,9 +17,10 @@ from data_to_parquet_spark.sources import xlsx
 from data_to_parquet_spark.sources.xlsx import (
     XlsxWorkbook,
     _fast_path_eligible,
-    decode_rows,
     load_shared_strings,
     load_shared_strings_fast,
+    walk_rows,
+    walk_rows_fast,
 )
 
 from .xlsx_fixture import write_xlsx
@@ -51,8 +54,8 @@ def test_fast_walker_normalizes_raw_carriage_returns_like_et():
         "</row>"
     )
     expected = [(0, [(0, "a\nb"), (1, "c\nd"), (2, "e\rf"), (3, "g\n\nh")])]
-    assert list(decode_rows(data, [], fast=False)) == expected
-    assert list(decode_rows(data, [], fast=True)) == expected
+    assert list(walk_rows(io.BytesIO(data), [])) == expected
+    assert list(walk_rows_fast(data, [])) == expected
 
 
 def test_fast_walker_resolves_references_like_et():
@@ -65,8 +68,8 @@ def test_fast_walker_resolves_references_like_et():
         "</row>"
     )
     expected = [(0, [(0, "\x85"), (1, "\x80<"), (2, "AB")])]
-    assert list(decode_rows(data, [], fast=False)) == expected
-    assert list(decode_rows(data, [], fast=True)) == expected
+    assert list(walk_rows(io.BytesIO(data), [])) == expected
+    assert list(walk_rows_fast(data, [])) == expected
 
 
 def test_fast_walker_multi_run_edge_tags_match_et():
@@ -80,8 +83,83 @@ def test_fast_walker_multi_run_edge_tags_match_et():
         "</row>"
     )
     expected = [(0, [(0, "b"), (1, "x"), (2, "yz")])]
-    assert list(decode_rows(data, [], fast=False)) == expected
-    assert list(decode_rows(data, [], fast=True)) == expected
+    assert list(walk_rows(io.BytesIO(data), [])) == expected
+    assert list(walk_rows_fast(data, [])) == expected
+
+
+def test_fast_walker_hands_off_mid_buffer_like_et(monkeypatch):
+    # rows before the handoff include r-less and self-closing ones; the
+    # ElementTree walker must resume exactly after the rows already yielded
+    data = _sheet(
+        '<row><c r="A1"><v>1</v></c></row>'
+        '<row r="3"/>'
+        "<row/>"
+        '<row><c r="A5" t="s"><v>0</v></c></row>'
+        '<row r="7"><c r="A7"><f>A1*2</f><v>2</v></c><c r="B7"><v>x</v></c></row>'
+        '<row><c r="B8"><v>3</v></c></row>'
+        '<row r="9"/>'
+    )
+    sst = ["s0"]
+    expected = list(walk_rows(io.BytesIO(data), sst))
+    assert expected == [
+        (0, [(0, "1")]),
+        (2, []),
+        (3, []),
+        (4, [(0, "s0")]),
+        (6, [(0, "2"), (1, "x")]),
+        (7, [(1, "3")]),
+        (8, []),
+    ]
+    handoffs = []
+
+    def spy(stream, table):
+        handoffs.append(1)
+        return walk_rows(stream, table)
+
+    monkeypatch.setattr(xlsx, "walk_rows", spy)
+    assert list(walk_rows_fast(data, sst)) == expected
+    assert handoffs == [1]
+
+
+@pytest.mark.parametrize(
+    "root",
+    [
+        f'<worksheet xmlns="{_NS}" xmlns:x-y="{_NS}">',
+        f"<worksheet xmlns=\"{_NS}\" xmlns:x='{_NS}'>",
+        f'<worksheet xmlns="{_NS}" xmlns:x = "{_NS}">',
+        f'<!DOCTYPE worksheet [<!ENTITY e "1">]><worksheet xmlns="{_NS}">',
+    ],
+    ids=["hyphenated_prefix", "single_quotes", "spaced_equals", "doctype"],
+)
+def test_sheet_parts_that_could_hide_rows_are_ineligible(root):
+    # a prefixed main namespace (any prefix spelling or quoting) allows
+    # rows the strict tier cannot see; a DTD can declare entities
+    data = _DECL + f'{root}<sheetData><row r="1"/></sheetData></worksheet>'.encode()
+    assert not _fast_path_eligible(data)
+
+
+def test_inline_string_phonetic_runs_are_not_text():
+    # Excel displays, calamine reads and the xlsb reader decodes only the
+    # base text; the <rPh> reading is dropped
+    data = _sheet(
+        '<row r="1"><c r="A1" t="inlineStr"><is><t>東京</t>'
+        '<rPh sb="0" eb="2"><t>トウキョウ</t></rPh><phoneticPr fontId="1"/>'
+        '</is></c><c r="B1" t="inlineStr"><is><r><t>大</t></r><r><t>阪</t></r>'
+        '<rPh sb="0" eb="2"><t>オオサカ</t></rPh></is></c></row>'
+    )
+    expected = [(0, [(0, "東京"), (1, "大阪")])]
+    assert list(walk_rows(io.BytesIO(data), [])) == expected
+    assert list(walk_rows_fast(data, [])) == expected
+
+
+def test_shared_string_phonetic_runs_are_not_text(tmp_path):
+    data = _sst(
+        _SST_ET_CASES["phonetic"]
+        + '<si><r><t>大</t></r><r><t>阪</t></r><rPh sb="0" eb="2"><t>オオサカ</t></rPh></si>'
+    )
+    assert load_shared_strings(io.BytesIO(data)) == ["東京", "大阪"]
+    with XlsxWorkbook(_workbook_with_sst(tmp_path, data)) as wb:
+        assert wb._shared_strings() == ["東京", "大阪"]
 
 
 # --- shared-strings loader ------------------------------------------------

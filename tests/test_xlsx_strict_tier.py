@@ -1,10 +1,10 @@
 """The strict cell tokenizer (_STRICT_CELL_RE tier inside walk_rows_fast)
-must decode exactly like the generic find-based decoder on the three
-machine-written shapes, with or without a numeric ``s=`` style between
-``r=`` and ``t=``, and must REFUSE (return None → per-row fallback) any
-body its matches do not tile completely — that refusal is what makes the
-tier safe on escapes, other attributes, attribute reorderings and
-multi-run inline strings.
+must decode exactly like the generic decoder, the ElementTree walker, on
+the three machine-written shapes, with or without a numeric ``s=`` style
+between ``r=`` and ``t=``, and must REFUSE (return None → ElementTree
+decodes the rest of the part) any body its matches do not tile
+completely — that refusal is what makes the tier safe on escapes, other
+attributes, attribute reorderings and multi-run inline strings.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def test_strict_numeric_renormalization_matches_generic():
     )
     # beyond-i64 integers take the f64 path like calamine (rounds to 1e23,
     # printed positionally per Rust Display)
-    assert dec(body) == [
+    assert dec(body) == _generic(body) == [
         (0, "7"),
         (1, "0"),
         (2, "100"),
@@ -66,23 +66,18 @@ def test_strict_numeric_renormalization_matches_generic():
     ]
 
 
-def _generic(body: str, monkeypatch):
-    """The same row body through the find-based decoder with the strict
-    tier switched off, and through the ElementTree walker; both must
-    agree before either serves as the reference."""
+def _generic(body: str):
+    """The same row body through the ElementTree walker, the reference
+    for every cell."""
     data = (
         f'<worksheet xmlns="{xlsx._MAIN_NS_URI}"><sheetData>'
         f'<row r="1">{body}</row></sheetData></worksheet>'
     ).encode()
-    with monkeypatch.context() as m:
-        m.setattr(xlsx, "_decode_strict_cells", lambda *a: None)
-        [(_, found)] = list(xlsx.walk_rows_fast(data, SST))
-    [(_, et)] = list(xlsx.walk_rows(io.BytesIO(data), xlsx._MAIN_NS, SST))
-    assert found == et, body
-    return found
+    [(_, et)] = list(xlsx.walk_rows(io.BytesIO(data), SST))
+    return et
 
 
-def test_strict_decodes_styled_cells_like_generic(monkeypatch):
+def test_strict_decodes_styled_cells_like_generic():
     # every t= the decoder dispatches on, each behind an s= style index
     for body in (
         '<c r="A1" s="3"><v>1</v></c>',
@@ -101,12 +96,12 @@ def test_strict_decodes_styled_cells_like_generic(monkeypatch):
     ):
         strict = dec(body)
         assert strict is not None, body
-        assert strict == _generic(body, monkeypatch), body
+        assert strict == _generic(body), body
 
 
 def test_strict_tier_engages_on_fixture_rows_with_date_cells(tmp_path):
     # a date cell carries s= on every row; the whole sheet must still
-    # decode on the strict tier, not row by row on the generic decoder
+    # decode on the strict tier, not hand off to ElementTree
     path = str(tmp_path / "dates.xlsx")
     rows = [["id", "when", "name", "ok", "amount"]] + [
         [i, ("date_serial", 45000 + i), f"n{i % 3}", i % 2 == 0, i * 0.5]
@@ -128,8 +123,8 @@ def test_strict_tier_engages_on_fixture_rows_with_date_cells(tmp_path):
 
 def test_strict_refuses_anything_else():
     # escapes, reordered attrs, non-numeric styles, multi-run inline
-    # strings, missing r, trailing junk — every one must defer to the
-    # generic path
+    # strings, missing r, trailing junk — every one must defer to
+    # ElementTree
     for body in (
         '<c r="A1"><v>1&amp;2</v></c>',
         '<c s="3" r="A1"><v>1</v></c>',
